@@ -79,7 +79,9 @@ def _launch_plain(cores: int) -> tuple[list[str], dict, str]:
 
 
 def _launch_submit(cores: int, zip_path: str) -> tuple[list[str], dict, str]:
-    mem = os.environ.get("SPARK_DRIVER_MEM", "24g")
+    from simages_spark.session import driver_java_options, driver_memory
+
+    mem = driver_memory()
     cmd = [
         "spark-submit",
         "--master", f"local[{cores}]",
@@ -87,12 +89,7 @@ def _launch_submit(cores: int, zip_path: str) -> tuple[list[str], dict, str]:
         # session.py sets these via the builder, which is too late for the
         # driver JVM under spark-submit (the gateway JVM starts before the
         # builder runs) — pass them on the submit command line instead
-        "--conf",
-        (
-            "spark.driver.extraJavaOptions="
-            f"-Xms{mem} -XX:ParallelGCThreads=8 -XX:ConcGCThreads=2 "
-            "-XX:CICompilerCount=6"
-        ),
+        "--conf", f"spark.driver.extraJavaOptions={driver_java_options(mem)}",
         "--py-files", zip_path,
         os.path.join(REPO, "tools", "submit_scaling_driver.py"),
         "--cores", str(cores),

@@ -73,7 +73,8 @@ class DedupConfig:
     # ~2.0 s vs ~4.4-5.7 s distributed, identical labels — the driver
     # path stays cheaper until well past 1M edges, and 1M keeps the
     # collect (16 MB) and the transient Python dicts (~150 MB) far from
-    # any driver-memory concern at the 24g default. Every genuinely
+    # any driver-memory concern at the default heap (a quarter of the
+    # host's memory, capped at 24g: ~4g on a 16 GB host). Every genuinely
     # large graph still takes the distributed rounds (asserted by the
     # 20M-edge soaks); the label-equality gate
     # (test_fast_path_equals_distributed_random_graph) pins identity.
