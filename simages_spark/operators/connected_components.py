@@ -82,10 +82,10 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     jobs each, which dominates wall-clock on small graphs the way job
     setup dominates a broadcast-able join. Same engine philosophy as
     `spark.sql.autoBroadcastJoinThreshold`: a size-gated physical
-    strategy for the same logical result. At the default 100k-edge bound
-    the collect is ~1.6 MB — far below any driver-memory concern — and
-    every large input still takes the distributed path (asserted by the
-    20M-edge soaks)."""
+    strategy for the same logical result. At the default 1M-edge bound
+    (`cc_driver_threshold`) the collect is ~16 MB of int64 pairs — far
+    below any driver-memory concern — and every large input still takes
+    the distributed path (asserted by the 20M-edge soaks)."""
     import pandas as pd
 
     spark = edges.sparkSession
@@ -101,7 +101,7 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
 
     # toPandas / createDataFrame(pandas): Arrow-batched both ways — the
     # pickled-Row collect + list-of-tuples createDataFrame measured ~3×
-    # slower at the 100k-edge threshold (guide §6: Arrow for driver
+    # slower on 100k edges (guide §6: Arrow for driver
     # transfers). Labels are identical; only the transfer encoding moved.
     pdf = edges.select("src", "dst").toPandas()
     for ra, rb in zip(pdf["src"].tolist(), pdf["dst"].tolist()):

@@ -23,6 +23,16 @@ def _local_dir() -> str:
 _HEAP_FRACTION = 4  # a quarter, the JVM's own MaxRAMPercentage=25
 _HEAP_CAP_MB = 24 * 1024
 
+# spark.sql.codegen.cache.maxEntries. Spark's default of 100 is split over
+# Guava's 4 cache segments (~25 entries each, each evicting LRU on its
+# own), while one pass of find_duplicates on 4k pages compiles 111
+# distinct classes and strip_duplicate_spans + line_deduped_corpus on 2k
+# pages 96, so every warm pass recompiled 48-67 of them. One session
+# running both plus the table-backed crawl compiles 409 distinct classes
+# (291 with stage ids out of the class names, below); at 1000 each
+# segment holds 250, about twice its expected share of 409.
+_CODEGEN_CACHE_ENTRIES = 1000
+
 
 def _cgroup_memory_limit(
     proc_cgroup: str = "/proc/self/cgroup", root: str = "/sys/fs/cgroup"
@@ -134,6 +144,14 @@ def get_spark(
         # internal precision exactly, and gets stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # generated classes are cached by source text: size the cache to
+        # the pipelines' measured working set (_CODEGEN_CACHE_ENTRIES), and
+        # keep whole-stage ids out of the class names. AQE numbers stages
+        # as it plans them, in an order that follows which shuffle stages
+        # finish first, so an unchanged fragment could get new source and
+        # recompile (30 classes at once on some warm span_dedup passes)
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", driver_mem)
         # this sandbox's virtio disk has ~50ms file-metadata latency; the
         # bypass shuffle writer opens R files per map task and spends 10×

@@ -1,9 +1,12 @@
-"""Driver-heap default of `get_spark`, checked without starting a JVM.
+"""Driver-heap and codegen-cache defaults of `get_spark`, checked without
+starting a JVM.
 
-The default is a quarter of the memory the process may use (the smaller
-of physical memory and its cgroup limit), capped at 24g; an
+The default heap is a quarter of the memory the process may use (the
+smaller of physical memory and its cgroup limit), capped at 24g; an
 `extra_conf["spark.driver.memory"]` wins over `SPARK_DRIVER_MEM`, which
-wins over the default, and `-Xms` always equals the chosen heap.
+wins over the default, and `-Xms` always equals the chosen heap. The
+generated-code cache holds 1000 classes unless `extra_conf` says
+otherwise.
 """
 
 from __future__ import annotations
@@ -149,3 +152,19 @@ def test_extra_conf_overrides_env(monkeypatch, fake_builder):
     session.get_spark(cores=2, extra_conf={"spark.driver.memory": "1500m"})
     assert fake_builder.conf["spark.driver.memory"] == "1500m"
     assert _xms(fake_builder.conf) == ["1500m"]
+
+
+def test_get_spark_sizes_codegen_cache(monkeypatch, fake_builder):
+    _host(monkeypatch, physical=16 * GIB)
+    session.get_spark(cores=2)
+    conf = fake_builder.conf
+    assert conf["spark.sql.codegen.cache.maxEntries"] == "1000"
+    assert conf["spark.sql.codegen.useIdInClassName"] == "false"
+
+
+def test_extra_conf_overrides_codegen_cache(monkeypatch, fake_builder):
+    _host(monkeypatch, physical=16 * GIB)
+    session.get_spark(
+        cores=2, extra_conf={"spark.sql.codegen.cache.maxEntries": "64"}
+    )
+    assert fake_builder.conf["spark.sql.codegen.cache.maxEntries"] == "64"
