@@ -1,29 +1,23 @@
 """Stage checkpointing — the analog of the reference's .npy signature cache
 (reference: src/simages/extractor.py:179-189: reload ⇒ skip recompute).
 
-Each pipeline stage can persist its output table and be skipped on resume.
-Backend is plain parquet in this build (the sandbox ships no lakehouse
-catalog jars; on a cluster with an ACID table format the same
-write/read/meta interface maps onto catalog tables). Stage writes are
-snapshot-atomic (tmp dir + rename swap + meta-last, below). For the
-CORPUS table itself — where concurrent writers and row-level
-DELETE/MERGE semantics matter — `simages_spark/table.py` provides a
-snapshot-versioned table with optimistic-concurrency commits and time
-travel, demonstrated under concurrent writers in tests/test_table.py.
+Each pipeline stage can persist its output and be skipped on resume.
+A stage is an ACID `SnapshotTable` (simages_spark/table.py) at
+`<root>/<stage>/`, and every write of it is one new table version whose
+manifest carries the stage metrics as commit properties. The commit
+point is the table's single atomic hardlink, so a killed write leaves
+the previous version readable. A rerun keeps the earlier versions
+(`history`, `read(version=...)`) until the workdir is cleared.
 
 Lineage (north_rule): every checkpointed row carries `part_id`
 (producing partition) and `stage_run_id`, so a resumed run can attribute
 every row to the task that wrote it.
 
-Filesystem contract: the swap relies on atomic directory `rename` —
-POSIX/HDFS semantics. On S3-class object stores (no atomic rename) the
-swap maps onto a manifest pointer updated with a conditional PUT, as in
-`table.py`'s commit protocol (see its docstring).
-
 Staleness guard: `get_or_compute` takes an optional `fingerprint`
-(e.g. a hash of the DedupConfig fields). It is stored in the stage meta;
-a rerun under a different config invalidates and recomputes the stage
-instead of silently returning results computed under the old knobs.
+(e.g. a hash of the DedupConfig fields). It is stored in the stage's
+commit properties; a rerun under a different config recomputes the
+stage (a new version) instead of silently returning results computed
+under the old knobs.
 """
 
 from __future__ import annotations
@@ -39,8 +33,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # storage-layout knobs that cannot change a stage's OUTPUT — hashing
 # them into the fingerprint would mark every existing checkpoint stale
-# on a backend switch or a workdir move (silent full recompute)
-_STORAGE_KNOBS = {"checkpoint_dir", "checkpoint_backend"}
+# on a workdir move (silent full recompute)
+_STORAGE_KNOBS = {"checkpoint_dir"}
 
 # execution-only knobs with the same contract: provably output-neutral
 # (shuffle_partitions is pure parallelism; cc_checkpoint_every is the CC
@@ -105,10 +99,10 @@ def config_fingerprint(cfg, stage: str | None = None) -> str:
     reproduce, so their first resume after upgrading recomputes once
     (the stale-checkpoint path, loud in the stage metrics' run_id).
     The alternative — keeping storage knobs in the hash — silently
-    invalidates every checkpoint on every workdir move or backend
-    switch, forever; one visible recompute at upgrade is the cheaper
-    contract. The same one-visible-recompute applies when a stage first
-    moves from whole-config to per-stage fingerprints."""
+    invalidates every checkpoint on every workdir move, forever; one
+    visible recompute at upgrade is the cheaper contract. The same
+    one-visible-recompute applies when a stage first moves from
+    whole-config to per-stage fingerprints."""
     neutral = _STAGE_NEUTRAL_KNOBS.get(stage, set()) if stage else set()
     items = sorted(
         (k, repr(v))
@@ -119,9 +113,6 @@ def config_fingerprint(cfg, stage: str | None = None) -> str:
         and k not in neutral
     )
     return hashlib.sha256(json.dumps(items).encode()).hexdigest()[:16]
-
-
-from simages_spark.table import _newest_mtime  # shared liveness signal
 
 
 def _check_fingerprint(name: str, stored, expected: str) -> None:
@@ -139,269 +130,23 @@ def _check_fingerprint(name: str, stored, expected: str) -> None:
         )
 
 
-def _footer_rows_and_files(path: str) -> tuple[int, int]:
-    """Row count + parquet file count from the footers — the metadata the
-    writer tasks already computed; no Spark job."""
-    import pyarrow.parquet as pq
-
-    rows = files = 0
-    for fname in sorted(os.listdir(path)):
-        if fname.endswith(".parquet"):
-            files += 1
-            rows += pq.ParquetFile(os.path.join(path, fname)).metadata.num_rows
-    return rows, files
-
-
-def _assert_backend_layout(root: str, name: str, backend: str) -> None:
-    """The two backends share the per-stage path `root/<name>` with
-    incompatible layouts; opening a stage written by the OTHER backend
-    must be a clear error, not a parquet 'conflicting directory
-    structures' crash (dirs reading table) or a silent
-    'stage not found' recompute (table reading dirs)."""
-    import glob as _glob
-
-    stage = os.path.join(root, name)
-    if backend == "table" and os.path.exists(stage + ".meta.json"):
+def _refuse_legacy_stage(root: str, name: str) -> None:
+    """A stage path holding a `<name>.meta.json` sidecar was written by
+    the old directory-swap store. Opening it as a table would miss it
+    and recompute into a directory that still holds its parquet files,
+    so it is refused with the fix instead."""
+    if os.path.exists(os.path.join(root, f"{name}.meta.json")):
         raise ValueError(
-            f"checkpoint stage '{name}' under {root} was written by the "
-            f"'dirs' backend — keep --checkpoint-backend dirs for this "
-            f"workdir, or use a fresh workdir for the table backend"
+            f"checkpoint stage '{name}' under {root} is in the old "
+            f"directory layout, which this build no longer reads — run "
+            f"`clear --workdir {root}` and recompute the stages"
         )
-    if backend == "dirs" and _glob.glob(os.path.join(stage, "v*.manifest.json")):
-        raise ValueError(
-            f"checkpoint stage '{name}' under {root} was written by the "
-            f"'table' backend — keep --checkpoint-backend table for this "
-            f"workdir, or use a fresh workdir for the dirs backend"
-        )
-
-
-class CheckpointStore:
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    def _path(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
-    def _meta_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}.meta.json")
-
-    def exists(self, name: str) -> bool:
-        _assert_backend_layout(self.root, name, "dirs")
-        # both the meta AND the data dir: a crash in the swap window can
-        # leave a stale meta pointing at a missing/renamed-away data dir —
-        # treat that as "stage absent" (recompute), never as corruption
-        return os.path.exists(self._meta_path(name)) and os.path.exists(
-            self._path(name)
-        )
-
-    def _sweep_stale(self, name: str, min_age_s: float = 3600.0) -> None:
-        """Remove leftovers of writes that died mid-flight (.tmp-*) and
-        swaps that died before cleanup (.old-*) — but only once they are
-        older than `min_age_s`: a SECOND writer of the same stage (two
-        CLI runs sharing a workdir) has a live `.tmp-<run>` dir in
-        flight, and an ungated sweep would delete its job's output
-        mid-write (round-3 advice item 4). Paired with collision-proof
-        uuid run_ids, a young tmp dir is always possibly-live."""
-        import glob
-        import shutil
-
-        now = time.time()
-        for d in (
-            glob.glob(self._path(f"{name}.tmp-*"))
-            + glob.glob(self._path(f"{name}.old-*"))
-            + glob.glob(self._meta_path(name) + ".tmp-*")  # crashed meta tmp
-            + glob.glob(self._meta_path(name) + ".rb-*")  # crashed rollback
-        ):
-            try:
-                # NEWEST mtime anywhere under the dir, not the top-level
-                # dir's: a long-running Spark write keeps adding task
-                # files under _temporary/ while the dir's own mtime stays
-                # at job start — judging age by the top level would sweep
-                # a live >1h write mid-job
-                if now - _newest_mtime(d) < min_age_s:
-                    continue
-            except OSError:
-                continue  # already gone (concurrent sweep)
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
-            else:
-                try:
-                    os.remove(d)
-                except OSError:
-                    pass
-
-    def write(
-        self,
-        name: str,
-        df: DataFrame,
-        run_id: str | None = None,
-        fingerprint: str | None = None,
-    ) -> DataFrame:
-        """Snapshot-atomic stage write: the job lands in `name.tmp-<run>`,
-        the meta content is SEALED from the tmp footers (zero extra Spark
-        jobs), the LIVE meta is unlinked, the data dirs are swapped, and
-        the new meta is installed LAST (atomic os.replace — the commit
-        point; `exists` requires meta AND data). A kill at any point
-        leaves either the previous snapshot fully readable or the stage
-        ABSENT (meta gone → resume recomputes) — never new data described
-        by the old run's meta/fingerprint, and never a half-replaced
-        directory (round-2 verdict item 7). Two concurrent writers of the
-        same stage: one wins, the loser fails with a clear error and its
-        tmp output removed (the table backend serializes instead — use it
-        when same-stage concurrent writers are expected)."""
-        # the guard matters MOST here: this path renames-away and
-        # rmtree's whatever sits at root/<name> — on a table-backend
-        # stage that would destroy its entire version history silently
-        _assert_backend_layout(self.root, name, "dirs")
-        import shutil
-
-        # uuid suffix: second-granularity timestamps collide when two
-        # writers start the same stage in the same second, and a collided
-        # run_id means a shared tmp-dir name (one writer's rename swaps
-        # the other's half-written job into place)
-        run_id = run_id or f"run-{int(time.time())}-{uuid.uuid4().hex[:8]}"
-        self._sweep_stale(name)
-        with_lineage = df.withColumn("part_id", F.spark_partition_id()).withColumn(
-            "stage_run_id", F.lit(run_id)
-        )
-        tmp = self._path(f"{name}.tmp-{run_id}")
-        final = self._path(name)
-        old = self._path(f"{name}.old-{run_id}")
-        with_lineage.write.mode("overwrite").parquet(tmp)
-        # rows from footers, partitions from the file count — no count()
-        # job and no distinct() shuffle; sealed BEFORE any swap so the
-        # published meta always describes exactly this run's data (file
-        # count == producing-partition count for the default write; see
-        # TableCheckpointStore.write for the honest caveat)
-        rows, n_files = _footer_rows_and_files(tmp)
-        meta = {
-            "name": name,
-            "run_id": run_id,
-            "fingerprint": fingerprint,
-            "rows": rows,
-            "partitions": n_files,
-            "written_at_unix": time.time(),
-            "schema": self.spark.read.parquet(tmp).schema.simpleString(),
-        }
-        meta_tmp = self._meta_path(name) + f".tmp-{run_id}"
-        with open(meta_tmp, "w") as f:
-            json.dump(meta, f, indent=2)
-        # snapshot the live meta BEFORE the swap so a failure mid-swap can
-        # reinstall it (round-4 advice item 2: without this, a transient
-        # FS error degraded to stage-absent AND the old data dir — already
-        # renamed to name.old-<run> — was swept as stale after 1h)
-        prev_meta = None
-        if os.path.exists(self._meta_path(name)):
-            try:
-                with open(self._meta_path(name)) as f:
-                    prev_meta = json.load(f)
-            except (OSError, ValueError):
-                prev_meta = None
-        try:
-            # stage goes ABSENT here: a crash below means recompute, never
-            # the previous meta describing this run's data
-            if os.path.exists(self._meta_path(name)):
-                os.unlink(self._meta_path(name))
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(tmp, final)
-        except OSError as e:
-            shutil.rmtree(tmp, ignore_errors=True)
-            try:
-                os.remove(meta_tmp)
-            except OSError:
-                pass
-            # roll back. Classify by what survived:
-            #   final+old both present → a concurrent writer installed
-            #     their output AFTER our successful rename-away (true lost
-            #     race) — leave theirs alone.
-            #   final present, old absent → our rename(final, old) ITSELF
-            #     failed (transient FS error): the data never moved, only
-            #     the meta was unlinked — reinstall the meta and the stage
-            #     costs nothing.
-            #   final absent, old present → our rename-away succeeded and
-            #     the install failed: rename the snapshot back + meta.
-            # (`final exists` alone is NOT a race signal: a failed
-            # rename(final, old) leaves final in place too, and treating
-            # that as a race both skipped the restore and blamed a
-            # nonexistent concurrent writer.)
-            final_exists = os.path.exists(final)
-            old_exists = os.path.exists(old)
-            lost_race = final_exists and old_exists
-            if not lost_race and (final_exists or old_exists):
-                try:
-                    if not final_exists:
-                        os.rename(old, final)
-                    if prev_meta is not None:
-                        rb_tmp = self._meta_path(name) + f".rb-{run_id}"
-                        with open(rb_tmp, "w") as f:
-                            json.dump(prev_meta, f, indent=2)
-                        os.replace(rb_tmp, self._meta_path(name))
-                except OSError:
-                    pass  # rollback is best-effort; worst case = recompute
-            if lost_race:
-                raise RuntimeError(
-                    f"checkpoint stage '{name}': a concurrent writer "
-                    f"swapped the stage mid-commit (lost the rename race) "
-                    f"— this writer's output was discarded; re-read the "
-                    f"stage or use the 'table' backend, which serializes "
-                    f"same-stage writers"
-                ) from e
-            raise RuntimeError(
-                f"checkpoint stage '{name}': filesystem error during the "
-                f"snapshot swap; the previous snapshot was restored where "
-                f"possible and this run's output discarded — retry the "
-                f"stage write"
-            ) from e
-        os.replace(meta_tmp, self._meta_path(name))  # commit point
-        shutil.rmtree(old, ignore_errors=True)
-        return self.spark.read.parquet(final).drop("part_id", "stage_run_id")
-
-    def read(
-        self, name: str, expected_fingerprint: str | None = None
-    ) -> DataFrame:
-        if not self.exists(name):
-            raise FileNotFoundError(
-                f"checkpoint stage '{name}' not found under {self.root} — "
-                f"run the producing stage first (e.g. `signatures` before "
-                f"`candidates` before `cluster`)"
-            )
-        if expected_fingerprint is not None:
-            _check_fingerprint(
-                name, self.metrics(name).get("fingerprint"), expected_fingerprint
-            )
-        return self.spark.read.parquet(self._path(name)).drop(
-            "part_id", "stage_run_id"
-        )
-
-    def metrics(self, name: str) -> dict:
-        with open(self._meta_path(name)) as f:
-            return json.load(f)
-
-    def get_or_compute(
-        self,
-        name: str,
-        compute,
-        run_id: str | None = None,
-        fingerprint: str | None = None,
-    ) -> DataFrame:
-        """Stage-skip on resume — the .npy-reload semantics. A stored
-        stage whose fingerprint differs from the requested one is STALE
-        (written under other config knobs) and is recomputed."""
-        if self.exists(name):
-            stored = self.metrics(name).get("fingerprint")
-            if fingerprint is None or stored == fingerprint:
-                return self.read(name)
-        return self.write(name, compute(), run_id=run_id, fingerprint=fingerprint)
 
 
 class TableCheckpointStore:
-    """Checkpoint stages as versions of an ACID `SnapshotTable` — the
-    lakehouse-shaped backend the module docstring promises (north_rule:
-    "checkpoints per-partition signature and edge state to Iceberg ...
-    resumes with full lineage and metrics").
+    """Checkpoint stages as versions of an ACID `SnapshotTable`
+    (north_rule: "checkpoints per-partition signature and edge state to
+    Iceberg ... resumes with full lineage and metrics").
 
     Layout: one SnapshotTable per stage at `<root>/<name>/`. Each write
     is a new table VERSION whose manifest carries the stage metrics
@@ -409,16 +154,15 @@ class TableCheckpointStore:
     properties — the same shape as Iceberg snapshot summary properties,
     so on a real catalog this maps 1:1 onto `table.snapshots()`.
 
-    What this buys over the directory store (same interface):
-      * the commit point is ONE atomic+exclusive hardlink — there is no
-        two-rename window that can leave "no stage at all" (the dir
-        store's one documented crash caveat);
+    What the table form gives a stage:
+      * the commit point is ONE atomic+exclusive hardlink — a killed
+        write never leaves "no stage at all";
       * every rerun of a stage is preserved as history: `history(name)`
         is the stage's full lineage, `read(name, version=...)` time-
         travels to any prior run's output, and a config-fingerprint
-        change is an auditable new version instead of an in-place swap;
+        change is an auditable new version, not an in-place replace;
       * concurrent writers of the same stage serialize through optimistic
-        commits instead of last-rename-wins.
+        commits instead of last-writer-wins.
 
     Metrics are computed from the staged files BEFORE the commit is
     published, so a version's manifest always describes exactly the data
@@ -433,11 +177,10 @@ class TableCheckpointStore:
     def _table(self, name: str):
         from simages_spark.table import SnapshotTable
 
-        _assert_backend_layout(self.root, name, "table")
+        _refuse_legacy_stage(self.root, name)
         return SnapshotTable(self.spark, os.path.join(self.root, name))
 
     def exists(self, name: str) -> bool:
-        _assert_backend_layout(self.root, name, "table")
         if not os.path.isdir(os.path.join(self.root, name)):
             return False
         return self._table(name).current_version() is not None
@@ -541,14 +284,3 @@ class TableCheckpointStore:
                 return self.read(name)
         return self.write(name, compute(), run_id=run_id, fingerprint=fingerprint)
 
-
-def make_checkpoint_store(
-    spark: SparkSession, root: str, backend: str = "dirs"
-):
-    """Factory: `dirs` = parquet directory swaps (default, zero deps),
-    `table` = SnapshotTable-versioned stages with commit-time lineage."""
-    if backend == "table":
-        return TableCheckpointStore(spark, root)
-    if backend == "dirs":
-        return CheckpointStore(spark, root)
-    raise ValueError(f"unknown checkpoint backend {backend!r}")

@@ -17,17 +17,16 @@ rescans the store payload. `--within-batch` additionally emits the
 batch's internal near-dup pairs, so probe edges ∪ corpus edges cluster
 identically to a from-scratch run on the union.
 
-`compact --stream-root <dir>` is the offline maintenance action for
-long-running crawls: folds the streaming stores' per-batch partitions
-into one compacted generation (simages_spark/maintenance.py).
-`compact --crawl-tables <root>` is its twin for the TABLE-backed crawl
-stores (stream_near_dedup_to_tables): SnapshotTable.compact() on each.
+`compact --crawl-tables <root>` is the offline maintenance action for
+long-running crawls (stream_near_dedup_to_tables, stream_crawl_dedup):
+SnapshotTable.compact() on each crawl table, and a fold of the crawl's
+incremental cluster labeling (`<root>/clusters`) when it exists.
 
-`--checkpoint-backend table` checkpoints every stage as a version of an
-ACID SnapshotTable instead of a directory swap: single-hardlink atomic
-commits, the full run history per stage, and stage time travel
-(checkpoint.TableCheckpointStore). The --py-files artifact itself is
-built by tools/make_pyfiles_zip.py (deterministic bytes).
+Every stage checkpoints as a version of an ACID SnapshotTable under
+`<workdir>/<stage>/`: single-hardlink atomic commits, the full run
+history per stage, and stage time travel (checkpoint.TableCheckpointStore).
+The --py-files artifact itself is built by tools/make_pyfiles_zip.py
+(deterministic bytes).
 """
 
 from __future__ import annotations
@@ -39,7 +38,7 @@ import sys
 
 from pyspark.sql import functions as F
 
-from simages_spark.checkpoint import config_fingerprint, make_checkpoint_store
+from simages_spark.checkpoint import TableCheckpointStore, config_fingerprint
 from simages_spark.config import DedupConfig
 from simages_spark.functions.signatures import compute_signatures, signature_metrics
 from simages_spark.operators.connected_components import connected_components
@@ -91,20 +90,16 @@ def main(argv: list[str] | None = None) -> int:
     ])
     ap.add_argument("--input", help="corpus parquet path")
     ap.add_argument("--workdir", help="checkpoint root")
-    ap.add_argument("--stream-root", default=None,
-                    help="compact: root of a streaming crawl store "
-                         "(containing sig/ idx/ edges/ as written by "
-                         "stream_near_dedup / stream_crawl_dedup); folds "
-                         "all batch_id partitions of each into one "
-                         "compacted generation. Run between streaming "
-                         "runs (availableNow slots), never mid-batch.")
     ap.add_argument("--crawl-tables", default=None,
-                    help="compact: root of a TABLE-backed crawl store "
-                         "(sig_table/ idx_table/ edges_table/ as written "
-                         "by stream_near_dedup_to_tables); runs "
-                         "SnapshotTable.compact() on each — bin-packs "
-                         "per-batch groups into ~--target-rows groups, "
-                         "history stays time-travelable")
+                    help="compact: root of a crawl store (sig_table/ "
+                         "idx_table/ edges_table/ [clusters/] as written "
+                         "by stream_near_dedup_to_tables or "
+                         "stream_crawl_dedup); runs SnapshotTable.compact()"
+                         " on each table — bin-packs per-batch groups into "
+                         "~--target-rows groups, history stays "
+                         "time-travelable — and folds the cluster "
+                         "labeling. Run between streaming runs "
+                         "(availableNow slots), never mid-batch.")
     ap.add_argument("--target-rows", type=int, default=50_000_000,
                     help="--crawl-tables: rows per packed group")
     ap.add_argument("--sort-by", default=None,
@@ -178,12 +173,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--history", action="store_true",
                     help="table: print the snapshot history")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--checkpoint-backend", choices=["dirs", "table"],
-                    default="dirs",
-                    help="'table' checkpoints each stage as a version of "
-                         "an ACID SnapshotTable: atomic single-hardlink "
-                         "commits, full per-stage run history, and stage "
-                         "time travel (checkpoint.TableCheckpointStore)")
     args = ap.parse_args(argv)
 
     if args.command == "table":
@@ -210,15 +199,16 @@ def main(argv: list[str] | None = None) -> int:
             if not old or not new:
                 ap.error("--rename-column expects OLD:NEW")
     elif args.command == "compact":
-        if not (args.stream_root or args.crawl_tables):
-            ap.error("compact requires --stream-root or --crawl-tables")
-        if args.crawl_tables and not any(
+        if not args.crawl_tables:
+            ap.error("compact requires --crawl-tables")
+        if not any(
             os.path.isdir(os.path.join(args.crawl_tables.rstrip("/"), n))
-            for n in ("sig_table", "idx_table", "edges_table")
+            for n in ("sig_table", "idx_table", "edges_table", "clusters")
         ):
             ap.error(
                 f"--crawl-tables {args.crawl_tables!r} contains no crawl "
-                "tables (expected sig_table/ idx_table/ edges_table/)"
+                "tables (expected sig_table/ idx_table/ edges_table/ or "
+                "clusters/)"
             )
     elif args.command == "clear":
         # clearing a checkpoint dir needs no corpus (and no Spark): the
@@ -275,84 +265,48 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "compact":
+        from simages_spark.table import SnapshotTable
+
         out = {}
-        if args.stream_root:
-            from simages_spark.maintenance import (
-                compact_edges_store,
-                compact_probe_index,
-                compact_signature_store,
-            )
-            from simages_spark.streaming import _hadoop_path_exists
-
-            found = False
-            for name, fn in (("sig", compact_signature_store),
-                             ("idx", compact_probe_index),
-                             ("edges", compact_edges_store)):
-                path = f"{args.stream_root.rstrip('/')}/{name}"
-                if _hadoop_path_exists(spark, path):
-                    found = True
-                    out[name] = fn(spark, path)
-            # the crawl's incremental cluster state: fold the label
+        croot = args.crawl_tables.rstrip("/")
+        for name in ("sig_table", "idx_table", "edges_table"):
+            # only open tables that exist: SnapshotTable.__init__ mkdirs
+            # its layout, and a typo'd --crawl-tables root must error,
+            # not fabricate empty skeletons and "succeed"
+            if not os.path.isdir(os.path.join(croot, name)):
+                continue
+            t = SnapshotTable(spark, os.path.join(croot, name))
+            if t.current_version() is not None:
+                cols = _schema_columns(t.manifest(t.current_version())["schema"])
+                sb = [args.sort_by] if args.sort_by and args.sort_by in cols else None
+                out[name] = t.compact(target_rows=args.target_rows, sort_by=sb)
+                if args.expire_keep is not None:
+                    out[name]["expired"] = t.expire_snapshots(
+                        keep_last=args.expire_keep
+                    )["expired"]
+                if args.vacuum_min_age is not None:
+                    out[name]["vacuumed"] = t.vacuum(
+                        min_age_s=args.vacuum_min_age
+                    )
+        cl_root = os.path.join(croot, "clusters")
+        if os.path.isdir(cl_root):
+            # the crawl's incremental cluster labeling: fold the label
             # forwarding table into members (same availableNow slot)
-            cl_root = f"{args.stream_root.rstrip('/')}/clusters"
-            if os.path.isdir(cl_root):
-                from simages_spark.operators.cluster_state import ClusterState
+            from simages_spark.operators.cluster_state import ClusterState
 
-                found = True
-                out["clusters"] = ClusterState(spark, cl_root).fold()
-            if not found:
-                # a typo'd --stream-root must error, not print {} and
-                # "succeed" — same contract as the --crawl-tables guard
-                spark.stop()
-                ap.error(
-                    f"--stream-root {args.stream_root!r} contains no "
-                    "streaming stores (expected sig/ idx/ edges/ or "
-                    "clusters/)"
-                )
-        if args.crawl_tables:
-            from simages_spark.table import SnapshotTable
-
-            croot = args.crawl_tables.rstrip("/")
-            for name in ("sig_table", "idx_table", "edges_table"):
-                # only open tables that exist: SnapshotTable.__init__
-                # mkdirs its layout, and a typo'd --crawl-tables root
-                # must error, not fabricate empty skeletons and "succeed"
-                if not os.path.isdir(os.path.join(croot, name)):
-                    continue
-                t = SnapshotTable(spark, os.path.join(croot, name))
-                if t.current_version() is not None:
-                    cols = _schema_columns(
-                        t.manifest(t.current_version())["schema"]
-                    )
-                    sb = (
-                        [args.sort_by]
-                        if args.sort_by and args.sort_by in cols
-                        else None
-                    )
-                    out[name] = t.compact(
-                        target_rows=args.target_rows, sort_by=sb
-                    )
-                    if args.expire_keep is not None:
-                        out[name]["expired"] = t.expire_snapshots(
-                            keep_last=args.expire_keep
-                        )["expired"]
-                    if args.vacuum_min_age is not None:
-                        out[name]["vacuumed"] = t.vacuum(
-                            min_age_s=args.vacuum_min_age
-                        )
+            out["clusters"] = ClusterState(spark, cl_root).fold()
         print(json.dumps(out))
         spark.stop()
         return 0
     cfg = DedupConfig(jaccard_threshold=args.threshold, checkpoint_dir=args.workdir,
-                      exact_first=not args.all_pairs_edges,
-                      checkpoint_backend=args.checkpoint_backend)
+                      exact_first=not args.all_pairs_edges)
     # per-stage fingerprints: each stage hashes only the knobs that can
     # change ITS output, and every cross-stage READ passes the expected
     # fingerprint — `cluster` after a config change refuses stale
     # signatures/candidates instead of silently mixing configs
     stage_fp = lambda stage: config_fingerprint(cfg, stage=stage)  # noqa: E731
     store = (
-        make_checkpoint_store(spark, args.workdir, args.checkpoint_backend)
+        TableCheckpointStore(spark, args.workdir)
         if args.workdir
         else None  # `show` takes no workdir
     )

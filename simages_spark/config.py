@@ -54,11 +54,9 @@ class DedupConfig:
 
     # --- checkpointing (analog of the .npy signature cache,
     #     reference: src/simages/extractor.py:179-189) ---
+    # each stage is a version of an ACID SnapshotTable under this root
+    # (checkpoint.TableCheckpointStore)
     checkpoint_dir: str | None = None
-    # 'dirs' = parquet directory swaps; 'table' = each stage is a version
-    # of an ACID SnapshotTable (atomic hardlink commits, per-stage run
-    # history + time travel — checkpoint.TableCheckpointStore)
-    checkpoint_backend: str = "dirs"
     # lineage-cut cadence in CC rounds. 1 = every round (measured best:
     # one LS+SS round is already ~6 shuffles deep and uncut Catalyst
     # re-analysis grows superlinearly); raise to trade analysis depth for

@@ -1,8 +1,8 @@
 """Shared Hadoop FileSystem helpers (py4j) — ONE home for the
-jvm-Path/getFileSystem dance so streaming.py and maintenance.py cannot
-drift on how filesystems are resolved (round-5 review: three copies).
-Correct on any Spark-visible filesystem (HDFS/S3A/local), unlike
-os.path which only sees the driver's local FS."""
+jvm-Path/getFileSystem dance the streaming module uses to read a
+streaming checkpoint's metadata and to probe sink paths. Correct on any
+Spark-visible filesystem (HDFS/S3A/local), unlike os.path which only
+sees the driver's local FS."""
 
 from __future__ import annotations
 

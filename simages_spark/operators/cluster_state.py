@@ -41,7 +41,7 @@ tools/soak_crawl_loop.py.
 
 Retry safety (foreachBatch replays): endpoint resolution reads members
 FILTERED to rows from earlier (source_id, batch_id) — the same
-pre-batch-view trick as streaming.process_near_dedup_batch — so a
+pre-batch-view trick as streaming.process_near_dedup_batch_tables — so a
 replayed tick recomputes from exactly the pre-tick state; the members
 append is `append_exactly_once` (per-source high-water marks) and the
 forward rewrite is a deterministic overwrite, so every crash window
@@ -67,81 +67,9 @@ from simages_spark.table import SnapshotTable
 MEMBERS_SCHEMA = "doc_id long, label long, source_id string, batch_id long"
 FORWARD_SCHEMA = "old_label long, label long"
 
-REBUILD_FLAG = "_rebuilding"
-
 
 def _progress_path(root: str, source_id: str) -> str:
     return os.path.join(root, f"progress_{source_id}.json")
-
-
-def read_progress(root: str, source_id: str) -> dict:
-    """{batch_id: int, gens: list[int]} fold progress for `source_id`
-    under cluster root `root` — module-level so maintenance jobs can
-    consult it without instantiating the state tables. batch_id is the
-    highest LIVE batch folded (-1 = none); gens lists the compacted
-    generations (negative batch_ids) known folded."""
-    try:
-        with open(_progress_path(root, source_id)) as f:
-            d = json.load(f)
-        return {
-            "batch_id": int(d.get("batch_id", -1)),
-            "gens": [int(g) for g in d.get("gens", [])],
-        }
-    except (OSError, ValueError, KeyError):
-        return {"batch_id": -1, "gens": []}
-
-
-def _write_progress(root: str, source_id: str, prog: dict) -> None:
-    path = _progress_path(root, source_id)
-    os.makedirs(root, exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "source_id": source_id,
-                "batch_id": int(prog["batch_id"]),
-                "gens": sorted(int(g) for g in set(prog["gens"])),
-            },
-            f,
-        )
-    os.replace(tmp, path)
-
-
-def _void_state(root: str) -> None:
-    """Delete all cluster state under `root`, crash-safely: the
-    REBUILD_FLAG is installed BEFORE any deletion and removed only after
-    everything is gone, and `ClusterState.__init__` finishes an
-    interrupted voiding — so a crash can never leave half-deleted state
-    (e.g. members without forward) silently read as current labels."""
-    import shutil
-
-    os.makedirs(root, exist_ok=True)
-    flag = os.path.join(root, REBUILD_FLAG)
-    with open(flag, "w") as f:
-        f.write("rebuild in progress")
-    shutil.rmtree(os.path.join(root, "forward"), ignore_errors=True)
-    shutil.rmtree(os.path.join(root, "members"), ignore_errors=True)
-    for name in os.listdir(root):
-        if name.startswith("progress_") and name.endswith(".json"):
-            try:
-                os.unlink(os.path.join(root, name))
-            except OSError:
-                pass
-    os.unlink(flag)
-
-
-def note_gen_folded(root: str, source_id: str, gen_batch_id: int) -> None:
-    """Record a compacted generation (negative batch_id) as folded into
-    the labeling — written by the catch-up after folding it, and by
-    `maintenance.compact_edges_store` when the generation it creates
-    contains only already-folded batches."""
-    if gen_batch_id >= 0:
-        raise ValueError("generations have negative batch_ids")
-    prog = read_progress(root, source_id)
-    if gen_batch_id in prog["gens"]:
-        return
-    prog["gens"].append(gen_batch_id)
-    _write_progress(root, source_id, prog)
 
 
 class ClusterState:
@@ -150,11 +78,6 @@ class ClusterState:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        if os.path.exists(os.path.join(root, REBUILD_FLAG)):
-            # a prior rebuild crashed mid-deletion; half-deleted state
-            # (e.g. members without forward) must never be read as
-            # current labels — finish voiding it first
-            _void_state(root)
         self.members = SnapshotTable(spark, f"{root}/members")
         self.forward = SnapshotTable(spark, f"{root}/forward")
 
@@ -213,40 +136,22 @@ class ClusterState:
         breaks. Lagging is always safe: re-folding an already-folded
         batch is idempotent (pre-batch-view resolution + exactly-once
         appends)."""
-        return read_progress(self.root, source_id)["batch_id"]
-
-    def folded_gens(self, source_id: str) -> set[int]:
-        """Compacted edge generations (negative batch_ids) known folded
-        into the labeling — see `note_gen_folded`."""
-        return set(read_progress(self.root, source_id)["gens"])
+        try:
+            with open(_progress_path(self.root, source_id)) as f:
+                return int(json.load(f)["batch_id"])
+        except (OSError, ValueError, KeyError):
+            return -1
 
     def set_watermark(self, source_id: str, batch_id: int) -> None:
         """Advance (never regress) the folded-batch watermark."""
-        prog = read_progress(self.root, source_id)
-        if batch_id <= prog["batch_id"]:
+        if batch_id <= self.watermark(source_id):
             return
-        prog["batch_id"] = batch_id
-        _write_progress(self.root, source_id, prog)
-
-    def note_gen(self, source_id: str, gen_batch_id: int) -> None:
-        note_gen_folded(self.root, source_id, gen_batch_id)
-
-    # ---------- rebuild ----------
-
-    @classmethod
-    def rebuild(cls, spark: SparkSession, root: str) -> "ClusterState":
-        """Void the state and start fresh — the recovery path when the
-        edges store was compacted past the labeling's fold progress (the
-        exact per-batch replay basis is gone, so the only way to keep
-        the clusters == from-scratch-CC contract is to refold all
-        surviving edge partitions once; callers do the refold).
-        Crash-safe via a flag file: the flag is installed BEFORE any
-        deletion and removed only after everything is gone, and
-        `__init__` completes an interrupted rebuild — so a crash can
-        never leave half-deleted state (e.g. members without forward)
-        being silently read as current labels."""
-        _void_state(root)
-        return cls(spark, root)
+        path = _progress_path(self.root, source_id)
+        os.makedirs(self.root, exist_ok=True)
+        tmp = f"{path}.tmp-{os.getpid()}"
+        with open(tmp, "w") as f:
+            json.dump({"source_id": source_id, "batch_id": int(batch_id)}, f)
+        os.replace(tmp, path)
 
     # ---------- tick update ----------
 
@@ -406,7 +311,7 @@ class ClusterState:
 
     def fold(self) -> dict:
         """Apply `forward` into `members` and empty it — the same
-        amortized-compaction idea as maintenance.compact_probe_state.
+        amortized-compaction idea as SnapshotTable.compact().
         Crash-safe by idempotence: re-applying an already-applied forward
         is a no-op (its old_labels no longer appear as member labels), so
         a crash between the two commits heals on the next fold or read."""

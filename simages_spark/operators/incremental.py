@@ -169,9 +169,7 @@ def incremental_dedup_edges(
     # A doc_id re-delivered with CHANGED text (same url, new crawl) would
     # otherwise race: dropDuplicates kept whichever row won the shuffle,
     # so verify scored nondeterministically against old-or-new shingles
-    # and edges flickered across runs (round-5 review). The store's own
-    # compaction applies the same keep-first rule
-    # (maintenance.compact_signature_store).
+    # and edges flickered across runs (round-5 review).
     sets = (
         new_sig.select(
             "doc_id",

@@ -28,7 +28,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from simages_spark.checkpoint import config_fingerprint, make_checkpoint_store
+from simages_spark.checkpoint import TableCheckpointStore, config_fingerprint
 from simages_spark.config import DedupConfig
 from simages_spark.functions.signatures import compute_signatures
 from simages_spark.operators.connected_components import connected_components
@@ -135,9 +135,7 @@ def find_duplicates(
     """
     cfg = cfg or DedupConfig()
     store = (
-        make_checkpoint_store(
-            docs.sparkSession, cfg.checkpoint_dir, cfg.checkpoint_backend
-        )
+        TableCheckpointStore(docs.sparkSession, cfg.checkpoint_dir)
         if cfg.checkpoint_dir
         else None
     )

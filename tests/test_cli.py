@@ -5,7 +5,7 @@ from __future__ import annotations
 import json
 import shutil
 
-from simages_spark.checkpoint import CheckpointStore
+from simages_spark.checkpoint import TableCheckpointStore
 from simages_spark.config import DedupConfig
 from simages_spark.functions.signatures import compute_signatures
 from simages_spark.operators.connected_components import connected_components
@@ -17,8 +17,8 @@ CFG = DedupConfig()
 
 def test_stagewise_checkpoint_flow(spark, docs_sf0001, tmp_path):
     """The cli.py command sequence (signatures → candidates → cluster →
-    apply-policy) as in-process calls over one CheckpointStore."""
-    store = CheckpointStore(spark, str(tmp_path / "wd"))
+    apply-policy) as in-process calls over one TableCheckpointStore."""
+    store = TableCheckpointStore(spark, str(tmp_path / "wd"))
 
     sig = store.get_or_compute(
         "signatures", lambda: compute_signatures(representative_docs(docs_sf0001), CFG)
@@ -49,11 +49,11 @@ def test_stagewise_checkpoint_flow(spark, docs_sf0001, tmp_path):
 
     # resume: fresh store over the same dir skips recompute and yields
     # identical rows (the .npy-cache semantics, extractor.py:179-189)
-    store2 = CheckpointStore(spark, str(tmp_path / "wd"))
+    store2 = TableCheckpointStore(spark, str(tmp_path / "wd"))
     sig2 = store2.get_or_compute("signatures", lambda: 1 / 0)  # must not run
     assert sig2.count() == meta["rows"]
 
-    # metrics sidecars are valid json for every stage
+    # stage metrics (commit properties) are valid json for every stage
     for stage in ("signatures", "candidates", "edges", "clusters"):
         m = store2.metrics(stage)
         assert json.dumps(m)  # serializable
@@ -100,7 +100,7 @@ def test_probe_flow_with_checkpointed_index(spark, docs_sf0001, tmp_path):
     from simages_spark.operators.incremental import incremental_dedup_edges
     from simages_spark.operators.sig_index import probe_keys
 
-    store = CheckpointStore(spark, str(tmp_path / "wd_probe"))
+    store = TableCheckpointStore(spark, str(tmp_path / "wd_probe"))
     sig = store.get_or_compute(
         "signatures",
         lambda: compute_signatures(representative_docs(docs_sf0001), CFG),
@@ -123,16 +123,13 @@ def test_probe_flow_with_checkpointed_index(spark, docs_sf0001, tmp_path):
     )  # every re-crawled doc matches the store
 
 
-def test_table_checkpoint_backend(spark, docs_sf0001, tmp_path):
-    """TableCheckpointStore: same stagewise flow as the dirs backend, plus
-    what the table form adds — per-stage version history (lineage of
-    reruns), stage time travel, and commit-time metrics."""
-    from simages_spark.checkpoint import (
-        config_fingerprint,
-        make_checkpoint_store,
-    )
+def test_table_checkpoint_store(spark, docs_sf0001, tmp_path):
+    """TableCheckpointStore: the stagewise flow plus what the table form
+    adds — per-stage version history (lineage of reruns), stage time
+    travel, and commit-time metrics."""
+    from simages_spark.checkpoint import config_fingerprint
 
-    store = make_checkpoint_store(spark, str(tmp_path / "twd"), "table")
+    store = TableCheckpointStore(spark, str(tmp_path / "twd"))
     fp = config_fingerprint(CFG)
 
     sig = store.get_or_compute(
@@ -165,7 +162,7 @@ def test_table_checkpoint_backend(spark, docs_sf0001, tmp_path):
     assert store.read("signatures", version=0).count() == n_sig  # time travel
     assert store.metrics("signatures", version=0)["fingerprint"] == fp
 
-    # downstream stages flow identically to the dirs backend
+    # downstream stages flow from the stored signatures
     cand = store.get_or_compute(
         "candidates", lambda: build_candidates(docs_sf0001, sig, CFG)
     )
@@ -176,15 +173,6 @@ def test_table_checkpoint_backend(spark, docs_sf0001, tmp_path):
         "clusters", lambda: connected_components(edges, CFG)
     )
     assert clusters.count() > 0
-
-    # both backends produce identical stage rows on the same input
-    dstore = make_checkpoint_store(spark, str(tmp_path / "dwd"), "dirs")
-    dsig = dstore.get_or_compute(
-        "signatures",
-        lambda: compute_signatures(representative_docs(docs_sf0001), CFG),
-        fingerprint=fp,
-    )
-    assert dsig.exceptAll(store.read("signatures", version=0)).count() == 0
 
 
 def test_schema_columns_parser():
@@ -212,34 +200,31 @@ def test_cli_compact_crawl_tables_missing_root_errors(tmp_path):
     assert not (tmp_path / "nope").exists()  # nothing fabricated
 
 
-def test_checkpoint_backend_layout_guard(spark, tmp_path):
-    """A stage written by one backend must be a clear error from the
-    other — not a parquet layout crash or a silent recompute."""
+def test_checkpoint_legacy_layout_refused(spark, tmp_path):
+    """A stage in the old directory layout (a `<name>.meta.json` sidecar
+    beside its parquet dir) must be a clear error that names `clear` —
+    not a silent recompute into the directory that still holds it."""
+    import os
+
     import pytest
 
-    from simages_spark.checkpoint import (
-        CheckpointStore,
-        TableCheckpointStore,
-        config_fingerprint,
-    )
+    from simages_spark.checkpoint import config_fingerprint
 
     wd = str(tmp_path / "wd")
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    CheckpointStore(spark, wd).write("sig", df)
-    with pytest.raises(ValueError, match="'dirs' backend"):
-        TableCheckpointStore(spark, wd).exists("sig")
+    os.makedirs(os.path.join(wd, "sig"))
+    with open(os.path.join(wd, "sig.meta.json"), "w") as f:
+        f.write("{}")
+    store = TableCheckpointStore(spark, wd)
+    with pytest.raises(ValueError, match="clear"):
+        store.exists("sig")
+    with pytest.raises(ValueError, match="clear"):
+        store.get_or_compute("sig", lambda: 1 / 0)
+    assert os.listdir(os.path.join(wd, "sig")) == []  # nothing written
 
-    wd2 = str(tmp_path / "wd2")
-    TableCheckpointStore(spark, wd2).write("sig", df)
-    with pytest.raises(ValueError, match="'table' backend"):
-        CheckpointStore(spark, wd2).exists("sig")
-
-    # storage knobs must NOT invalidate fingerprints: flipping the
-    # backend or moving the workdir is not a semantic config change
-    from simages_spark.config import DedupConfig
-
-    a = DedupConfig(checkpoint_dir="/x", checkpoint_backend="dirs")
-    b = DedupConfig(checkpoint_dir="/y", checkpoint_backend="table")
+    # storage knobs must NOT invalidate fingerprints: moving the workdir
+    # is not a semantic config change
+    a = DedupConfig(checkpoint_dir="/x")
+    b = DedupConfig(checkpoint_dir="/y")
     assert config_fingerprint(a) == config_fingerprint(b)
     assert config_fingerprint(a) != config_fingerprint(
         DedupConfig(jaccard_threshold=0.7)
@@ -327,20 +312,30 @@ def test_cli_table_rejects_malformed_rename_before_any_mutation(
     assert t.read().count() == 5
 
 
-def test_cli_compact_stream_root_without_stores_errors(
-    spark, tmp_path, monkeypatch
+def test_cli_compact_crawl_tables_folds_clusters(
+    spark, tmp_path, monkeypatch, capsys
 ):
-    """A typo'd --stream-root must error, not print {} and exit 0 — the
-    same contract the --crawl-tables guard already enforced."""
-    import pytest
-
+    """`compact --crawl-tables` folds the crawl's cluster forwarding
+    table into its members (a root holding only `clusters/` is valid);
+    the labels read the same before and after."""
     from simages_spark.cli import main
+    from simages_spark.operators.cluster_state import ClusterState
 
     monkeypatch.setattr(spark, "stop", lambda: None)
-    empty = tmp_path / "not_a_stream_root"
-    empty.mkdir()
-    with pytest.raises(SystemExit):
-        main(["compact", "--stream-root", str(empty)])
+    root = str(tmp_path / "crawl")
+    st = ClusterState(spark, f"{root}/clusters")
+    edges = "src long, dst long"
+    st.update(spark.createDataFrame([(3, 2)], edges), 0, cfg=CFG)
+    st.update(spark.createDataFrame([(2, 1)], edges), 1, cfg=CFG)  # 2 → 1
+    before = {tuple(r) for r in st.clusters().collect()}
+    assert before == {(1, 1), (2, 1), (3, 1)}
+    capsys.readouterr()
+
+    assert main(["compact", "--crawl-tables", root]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out == {"clusters": {"folded": True, "forward_entries_applied": 1}}
+    assert st.forward.manifest_row_count() == 0
+    assert {tuple(r) for r in st.clusters().collect()} == before
 
 
 def test_cli_clear_needs_no_corpus_and_no_spark(tmp_path, capsys):
@@ -400,7 +395,6 @@ def test_cli_strip_substrings_command(spark, tmp_path, monkeypatch, capsys):
     reuses both stages (stage-skip)."""
     import random
 
-    from simages_spark.checkpoint import CheckpointStore
     from simages_spark.cli import main
 
     monkeypatch.setattr(spark, "stop", lambda: None)
@@ -428,7 +422,7 @@ def test_cli_strip_substrings_command(spark, tmp_path, monkeypatch, capsys):
     assert out["spans_removed"] == 1
     assert out["chars_removed"] >= 90  # the boiler run leaves doc 2
 
-    store = CheckpointStore(spark, wd)
+    store = TableCheckpointStore(spark, wd)
     assert store.exists("substring_spans") and store.exists("stripped_corpus")
     stripped = {
         r["doc_id"]: r["text"] for r in store.read("stripped_corpus").collect()
@@ -450,7 +444,6 @@ def test_cli_decontaminate_command(spark, tmp_path, monkeypatch, capsys):
     """`decontaminate`: flags corpus docs sharing 5-gram shingles with the
     benchmark parquet; report checkpointed under a (k, cap, benchmark)
     fingerprint; a changed benchmark path recomputes."""
-    from simages_spark.checkpoint import CheckpointStore
     from simages_spark.cli import main
 
     monkeypatch.setattr(spark, "stop", lambda: None)
@@ -485,7 +478,7 @@ def test_cli_decontaminate_command(spark, tmp_path, monkeypatch, capsys):
     assert out == {
         "contaminated_docs": 1, "corpus_docs": 3, "benchmark_docs": 1,
     }
-    store = CheckpointStore(spark, wd)
+    store = TableCheckpointStore(spark, wd)
     flagged = store.read("decontamination").collect()
     assert [r["doc_id"] for r in flagged] == [2]
     assert flagged[0]["n_overlap"] >= 1
@@ -519,7 +512,6 @@ def test_cli_decontaminate_command(spark, tmp_path, monkeypatch, capsys):
 def test_cli_line_dedup_command(spark, tmp_path, monkeypatch, capsys):
     """`line-dedup`: stats + deduped corpus checkpointed under the
     segment-width fingerprint; rerun stage-skips; width change recomputes."""
-    from simages_spark.checkpoint import CheckpointStore
     from simages_spark.cli import main
 
     monkeypatch.setattr(spark, "stop", lambda: None)
@@ -546,7 +538,7 @@ def test_cli_line_dedup_command(spark, tmp_path, monkeypatch, capsys):
     assert out["dup_segments"] == 1  # doc 2's boiler window lost to doc 1
     assert out["segments_kept"] == out["segments"] - 1
 
-    store = CheckpointStore(spark, wd)
+    store = TableCheckpointStore(spark, wd)
     deduped = {
         r["doc_id"]: r["text_deduped"]
         for r in store.read("line_deduped_corpus").collect()

@@ -112,24 +112,3 @@ def test_multi_source_ticks(spark, tmp_path):
         _edges_df(spark, [(1, 2), (2, 7), (7, 0)]), DedupConfig()
     )
     assert _label_set(state.clusters()) == _label_set(scratch)
-
-
-def test_rebuild_flag_voids_half_deleted_state(spark, tmp_path):
-    """A crash mid-rebuild must never leave half-deleted state silently
-    read as current labels: the flag file marks the state void, and the
-    next constructor finishes the deletion."""
-    import os
-
-    root = str(tmp_path / "cs_rebuild")
-    st = ClusterState(spark, root)
-    st.update(_edges_df(spark, [(2, 1)]), 0, cfg=DedupConfig())
-    assert st.clusters().count() == 2
-    # simulate a rebuild that crashed right after installing the flag
-    open(os.path.join(root, "_rebuilding"), "w").close()
-    st2 = ClusterState(spark, root)
-    assert not os.path.exists(os.path.join(root, "_rebuilding"))
-    assert st2.members.current_version() is None
-    assert st2.clusters().count() == 0
-    # and the voided state accepts a fresh fold
-    st2.update(_edges_df(spark, [(4, 3)]), 0, cfg=DedupConfig())
-    assert st2.clusters().count() == 2

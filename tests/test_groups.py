@@ -129,10 +129,10 @@ def test_patch_annotations(spark):
 def test_checkpoint_fingerprint_invalidation(spark, tmp_path):
     """A stage written under one config must NOT satisfy a run under a
     different config (e.g. cli --threshold change)."""
-    from simages_spark.checkpoint import CheckpointStore, config_fingerprint
+    from simages_spark.checkpoint import TableCheckpointStore, config_fingerprint
     from simages_spark.config import DedupConfig
 
-    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    store = TableCheckpointStore(spark, str(tmp_path / "ck"))
     fp1 = config_fingerprint(DedupConfig(jaccard_threshold=0.5))
     fp2 = config_fingerprint(DedupConfig(jaccard_threshold=0.8))
     assert fp1 != fp2
@@ -153,66 +153,14 @@ def test_checkpoint_fingerprint_invalidation(spark, tmp_path):
 
 
 def test_checkpoint_missing_stage_friendly_error(spark, tmp_path):
-    from simages_spark.checkpoint import CheckpointStore
+    from simages_spark.checkpoint import TableCheckpointStore
 
-    store = CheckpointStore(spark, str(tmp_path / "ck2"))
+    store = TableCheckpointStore(spark, str(tmp_path / "ck2"))
     try:
         store.read("clusters")
         raise AssertionError("expected FileNotFoundError")
     except FileNotFoundError as e:
         assert "producing stage" in str(e)
-
-
-def test_checkpoint_write_crash_atomic(spark, tmp_path):
-    """A write killed mid-flight must leave the previous snapshot fully
-    readable: (a) a dead .tmp-* dir is ignored and swept; (b) a stale
-    meta whose data dir vanished (kill inside the swap window) reads as
-    stage-absent and recomputes instead of erroring."""
-    import os
-    import shutil
-
-    from simages_spark.checkpoint import CheckpointStore
-
-    store = CheckpointStore(spark, str(tmp_path / "ck3"))
-    store.write("s", spark.createDataFrame([(1,)], ["x"]), run_id="r1")
-
-    # (a) simulate a write that died during the tmp job — long ago, so
-    # the sweep's grace window (which protects LIVE concurrent writers'
-    # in-flight tmp dirs) treats it as genuinely dead
-    dead_tmp = os.path.join(str(tmp_path / "ck3"), "s.tmp-r2")
-    os.makedirs(dead_tmp)
-    open(os.path.join(dead_tmp, "part-00000.parquet"), "w").write("garbage")
-    # backdate EVERYTHING under it past the grace window: the sweep now
-    # judges liveness by the newest mtime anywhere in the dir (a live
-    # long write keeps adding young task files), so a truly dead write
-    # means dir AND contents are old
-    os.utime(os.path.join(dead_tmp, "part-00000.parquet"), (0, 0))
-    os.utime(dead_tmp, (0, 0))
-    assert store.get_or_compute("s", lambda: 1 / 0).collect()[0]["x"] == 1
-    store.write("s", spark.createDataFrame([(2,)], ["x"]), run_id="r3")
-    assert not os.path.exists(dead_tmp)  # swept by the next write
-    assert store.read("s").collect()[0]["x"] == 2
-
-    # (a') a YOUNG tmp dir is a possibly-live concurrent writer's job —
-    # the sweep must leave it alone (round-3 advice item 4)
-    live_tmp = os.path.join(str(tmp_path / "ck3"), "s.tmp-live")
-    os.makedirs(live_tmp)
-    store.write("s", spark.createDataFrame([(4,)], ["x"]), run_id="r4")
-    assert os.path.exists(live_tmp)
-    shutil.rmtree(live_tmp)
-
-    # default run_ids are collision-proof even within one second
-    ids = set()
-    for _ in range(2):
-        store.write("s", spark.createDataFrame([(5,)], ["x"]))
-        ids.add(store.metrics("s")["run_id"])
-    assert len(ids) == 2
-
-    # (b) kill inside the swap window: data dir gone, meta still present
-    shutil.rmtree(os.path.join(str(tmp_path / "ck3"), "s"))
-    assert not store.exists("s")
-    got = store.get_or_compute("s", lambda: spark.createDataFrame([(3,)], ["x"]))
-    assert got.collect()[0]["x"] == 3
 
 
 def test_dedup_tier_summary(spark):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from simages_spark.config import DedupConfig
@@ -79,36 +80,62 @@ def test_simhash_parity_in_probe(spark):
     assert (10, 1) in got
 
 
-def test_process_batch_retry_reads_pre_batch_state(spark, tmp_path):
-    """A foreachBatch retry whose failed attempt already wrote this
-    batch's signature/index partitions must still probe the PRE-batch
-    state (batch_id < current filter): no within-batch edges leak in, and
-    the replaced edges partition equals a clean run's."""
-    from simages_spark.streaming import process_near_dedup_batch
-
-    sig_dir = str(tmp_path / "sig")
-    idx_dir = str(tmp_path / "idx")
-    edg_dir = str(tmp_path / "edges")
+def test_process_batch_retry_reads_pre_batch_state(
+    spark, tmp_path, monkeypatch
+):
+    """A foreachBatch retry (same source_id, same batch id) after only
+    some of the batch's three commits landed must still probe the
+    PRE-batch state (batch_id < current scan): no within-batch edges
+    leak in, the commits that landed are not repeated, and the end state
+    equals a clean run's."""
+    from simages_spark.streaming import process_near_dedup_batch_tables
+    from simages_spark.table import SnapshotTable
 
     seed = _df(spark, [(1, BASE_A), (2, BASE_B)])
-    process_near_dedup_batch(seed, 0, sig_dir, idx_dir, edg_dir, CFG)
-
     # batch 1 contains an internal exact pair (10, 11) plus a corpus dup
     batch = _df(spark, [(10, NEAR_A), (11, NEAR_A)])
-    process_near_dedup_batch(batch, 1, sig_dir, idx_dir, edg_dir, CFG)
-    clean = _edges(spark.read.parquet(edg_dir))
+
+    def tables(root):
+        return {
+            n: SnapshotTable(spark, f"{root}/{n}")
+            for n in ("sig_table", "idx_table", "edges_table")
+        }
+
+    clean_root = str(tmp_path / "clean")
+    process_near_dedup_batch_tables(seed, 0, clean_root, CFG, source_id="s")
+    process_near_dedup_batch_tables(batch, 1, clean_root, CFG, source_id="s")
+    clean = _edges(tables(clean_root)["edges_table"].read())
     assert set(clean) == {(10, 1), (11, 1)}  # no (10,11)/(11,10) edge
 
-    # simulate the retry: partitions for batch 1 exist, run it again
-    process_near_dedup_batch(batch, 1, sig_dir, idx_dir, edg_dir, CFG)
-    retried = _edges(spark.read.parquet(edg_dir))
-    assert retried == clean
-    # store/index still exactly one copy per batch
-    assert spark.read.parquet(sig_dir).count() == 4
-    n_per_doc = (
-        spark.read.parquet(idx_dir).groupBy("doc_id").count().collect()
-    )
-    assert all(r["count"] == 36 for r in n_per_doc)  # 16 bands + 20 simhash
+    real_append = SnapshotTable.append_exactly_once
+    # commit order is edges → sig → idx: crash before sig, then before idx
+    for crash_at in ("sig_table", "idx_table"):
+        root = str(tmp_path / f"crash_{crash_at}")
+        process_near_dedup_batch_tables(seed, 0, root, CFG, source_id="s")
+
+        def failing_append(self, df, source_id, seq, **kw):
+            if self.root.endswith(crash_at):
+                raise RuntimeError("injected crash")
+            return real_append(self, df, source_id, seq, **kw)
+
+        monkeypatch.setattr(
+            SnapshotTable, "append_exactly_once", failing_append
+        )
+        with pytest.raises(RuntimeError, match="injected crash"):
+            process_near_dedup_batch_tables(batch, 1, root, CFG, source_id="s")
+        monkeypatch.undo()
+        t = tables(root)
+        landed = {n: t[n].current_version() for n in t}
+
+        # the retry: same source_id and batch id
+        process_near_dedup_batch_tables(batch, 1, root, CFG, source_id="s")
+        assert _edges(t["edges_table"].read()) == clean
+        # the edges commit that landed was not repeated
+        assert t["edges_table"].current_version() == landed["edges_table"]
+        # store/index hold exactly one copy per batch
+        assert t["sig_table"].read().count() == 4
+        n_per_doc = t["idx_table"].read().groupBy("doc_id").count().collect()
+        assert all(r["count"] == 36 for r in n_per_doc)  # 16 bands + 20 simhash
 
 
 def test_unified_within_batch_equals_from_scratch(spark):
@@ -173,16 +200,15 @@ def test_probe_metrics_counts(spark):
 def test_first_batch_within_edges(spark, tmp_path):
     """include_within_batch on the FIRST batch (no prior store) still
     emits the batch-internal pairs."""
-    from simages_spark.streaming import process_near_dedup_batch
+    from simages_spark.streaming import process_near_dedup_batch_tables
+    from simages_spark.table import SnapshotTable
 
-    sig_dir = str(tmp_path / "s")
-    idx_dir = str(tmp_path / "i")
-    edg_dir = str(tmp_path / "e")
+    root = str(tmp_path / "crawl")
     batch = _df(spark, [(1, BASE_A), (2, BASE_A), (3, "something else")])
-    process_near_dedup_batch(
-        batch, 0, sig_dir, idx_dir, edg_dir, CFG, include_within_batch=True
+    process_near_dedup_batch_tables(
+        batch, 0, root, CFG, include_within_batch=True
     )
-    got = _edges(spark.read.parquet(edg_dir))
+    got = _edges(SnapshotTable(spark, f"{root}/edges_table").read())
     assert set(got) == {(1, 2)} and got[(1, 2)] == 1.0
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from simages_spark.checkpoint import TableCheckpointStore
 from simages_spark.config import DedupConfig
 from simages_spark.operators.groups import duplicate_groups, keep_first_policy
 from simages_spark.pipeline import find_duplicates, top_pairs
@@ -125,10 +126,11 @@ def test_checkpoint_resume(spark, docs_sf0001, tmp_path):
     r2 = find_duplicates(docs_sf0001, cfg)
     assert _pairs(r2.edges.collect()) == edges1
     assert {(r["doc_id"], r["cluster_id"]) for r in r2.clusters.collect()} == clusters1
-    store_files = list((tmp_path / "ckpt").glob("*.meta.json"))
-    assert {f.name for f in store_files} >= {
-        "signatures.meta.json", "edges.meta.json", "clusters.meta.json"
-    }
+    store = TableCheckpointStore(spark, str(tmp_path / "ckpt"))
+    for stage in ("signatures", "edges", "clusters"):
+        assert store.exists(stage), stage
+        # the resume read the stage, it did not write a second version
+        assert len(store.history(stage)) == 1, stage
 
 
 def test_groups_and_policy(spark, docs_sf001, dedup_sf001):

@@ -138,52 +138,6 @@ def test_stream_dedup_exact_stateful(spark, tmp_path):
     assert got2 == {1, 2, 6}  # 5 suppressed by cross-batch state
 
 
-def test_stream_near_dedup(spark, tmp_path):
-    """Each micro-batch is near-dup-probed against all PRIOR batches'
-    signatures; matches append as (src=new, dst=existing) edges; re-runs
-    are idempotent (dynamic partition overwrite per batch_id)."""
-    from simages_spark.streaming import stream_near_dedup
-
-    inp = str(tmp_path / "incoming")
-    sig = str(tmp_path / "sig")
-    edg = str(tmp_path / "edges")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(inp, exist_ok=True)
-
-    base = " ".join(f"word{i}" for i in range(40))
-    near = " ".join(("CHANGED" if i == 20 else f"word{i}") for i in range(40))
-
-    # batch 1: seed corpus — no prior signatures, so no edges
-    _write_batch(spark, inp, [(1, base, "en", "s", 0),
-                              (2, "some other unrelated page", "en", "s", 0)])
-    stream_near_dedup(spark, inp, sig, edg, ckpt).awaitTermination()
-    assert spark.read.parquet(sig).count() == 2
-    # no prior corpus → no edge DATA yet. The dir itself now exists (it
-    # holds the _incarnation marker the wipe-guard writes); consumers
-    # already treat a data-less dir as empty, which is what matters.
-    if os.path.exists(edg):
-        assert all(f.startswith(("_", ".")) for f in os.listdir(edg))
-
-    # batch 2: exact copy + near-dup of doc 1, one fresh doc
-    _write_batch(spark, inp, [(10, base, "en", "s", 0),
-                              (11, near, "en", "s", 0),
-                              (12, "completely new content here", "en", "s", 0)])
-    stream_near_dedup(spark, inp, sig, edg, ckpt).awaitTermination()
-    edges = {(r["src"], r["dst"]): round(r["jaccard"], 6)
-             for r in spark.read.parquet(edg).collect()}
-    assert edges[(10, 1)] == 1.0
-    assert 0.7 < edges[(11, 1)] < 0.8
-    assert set(edges) == {(10, 1), (11, 1)}
-    # signature store now covers all batches
-    assert spark.read.parquet(sig).count() == 5
-
-    # batch 3 dedups against batches 1 AND 2
-    _write_batch(spark, inp, [(20, "completely new content here", "en", "s", 0)])
-    stream_near_dedup(spark, inp, sig, edg, ckpt).awaitTermination()
-    edges3 = {(r["src"], r["dst"]) for r in spark.read.parquet(edg).collect()}
-    assert (20, 12) in edges3
-
-
 def test_stream_crawl_dedup_empty_input_reports_zeros(spark, tmp_path):
     """A cron tick that fires before any crawl files land must report
     zeros, not crash: the file sink creates the lineage dir at query
@@ -206,35 +160,14 @@ def test_stream_crawl_dedup_empty_input_reports_zeros(spark, tmp_path):
     out = stream_crawl_dedup(spark, inp, root, CFG)
     assert out["lineage_rows"] == 2 and out["probe_docs"] == 1
 
+    # a root holding the old partition-directory stores is refused, not
+    # silently restarted beside them
+    import pytest
 
-def test_near_dedup_batch_tolerates_empty_micro_batch(spark, tmp_path):
-    """An all-empty micro-batch between real ones must not wedge the
-    stream: writing its (empty) partitions would leave a schema-less
-    signatures dir that crashes the next batch's read."""
-    from simages_spark.streaming import process_near_dedup_batch
-
-    root = str(tmp_path / "nd")
-    sig, idx, edg = f"{root}/sig", f"{root}/idx", f"{root}/edges"
-    base = " ".join(f"word{i}" for i in range(40))
-    empty = spark.createDataFrame([], "doc_id long, text string")
-
-    # batch 0 EMPTY on a fresh store: must create nothing
-    process_near_dedup_batch(empty, 0, sig, idx, edg, CFG)
-    assert not os.path.exists(sig)
-    # batch 1 real, batch 2 empty, batch 3 a re-crawl of batch 1's doc
-    process_near_dedup_batch(
-        spark.createDataFrame([(1, base)], "doc_id long, text string"),
-        1, sig, idx, edg, CFG,
-    )
-    process_near_dedup_batch(empty, 2, sig, idx, edg, CFG)
-    process_near_dedup_batch(
-        spark.createDataFrame([(9, base)], "doc_id long, text string"),
-        3, sig, idx, edg, CFG,
-    )
-    got = {
-        (r["src"], r["dst"]) for r in spark.read.parquet(edg).collect()
-    }
-    assert (1, 9) in got or (9, 1) in got
+    legacy = tmp_path / "legacy_crawl"
+    (legacy / "edges").mkdir(parents=True)
+    with pytest.raises(ValueError, match="fresh root"):
+        stream_crawl_dedup(spark, inp, str(legacy), CFG)
 
 
 def test_stream_crawl_dedup_flood_and_cluster_equality(spark, tmp_path):
@@ -275,7 +208,9 @@ def test_stream_crawl_dedup_flood_and_cluster_equality(spark, tmp_path):
     n_docs = len(rows1) + len(rows2)
     assert out["lineage_rows"] == n_docs
     assert out["probe_docs"] == 5  # base, unrelated, flood, near, fresh
-    sig = spark.read.parquet(f"{root}/sig")
+    from simages_spark.table import SnapshotTable
+
+    sig = SnapshotTable(spark, f"{root}/sig_table").read()
     assert sig.where(F.col("doc_id") >= 100).count() == 1  # flood keeper only
 
     # cluster equality vs from-scratch on the union
@@ -366,9 +301,9 @@ def test_stream_signatures_to_table_exactly_once(spark, tmp_path):
 
 
 def test_stream_near_dedup_to_tables(spark, tmp_path):
-    """The fully table-backed crawl loop: same edges as the dir-backed
-    stream on the same batches; state lands as atomic audited table
-    versions; a batch replay is a no-op on all three tables."""
+    """The table-backed crawl loop: each batch is probed against all
+    prior batches; state lands as atomic audited table versions; a batch
+    replay is a no-op on all three tables."""
     from simages_spark.streaming import (
         process_near_dedup_batch_tables,
         stream_near_dedup_to_tables,
@@ -415,7 +350,7 @@ def test_stream_near_dedup_to_tables(spark, tmp_path):
              for r in edges_t.read().collect()}
     assert edges[(10, 1)] == 1.0
     assert 0.7 < edges[(11, 1)] < 0.8
-    assert set(edges) == {(10, 1), (11, 1)}  # same as the dir-backed stream
+    assert set(edges) == {(10, 1), (11, 1)}  # cross-corpus edges only
     assert sig_t.read().count() == 5
 
     _write_batch(spark, inp, [(20, "completely new content here", "en", "s", 0)])
@@ -544,15 +479,17 @@ def test_crawl_cluster_maintenance_catches_up_on_preexisting_history(
     assert inc == scratch
     assert {(1, 1), (2, 1), (3, 1)} <= inc
 
-    # a third tick (no new files) is a no-op: watermark prevents refolds
+    # a third tick (no new files) is a no-op: the watermark prevents
+    # refolds, so the labeling commits no new version
     from simages_spark.operators.cluster_state import ClusterState
 
-    wm_before = ClusterState(spark, f"{root}/clusters").watermark("near")
+    def versions():
+        st = ClusterState(spark, f"{root}/clusters")
+        return st.members.current_version(), st.forward.current_version()
+
+    before = versions()
     stream_crawl_dedup(spark, inp, root, CFG, maintain_clusters=True)
-    assert (
-        ClusterState(spark, f"{root}/clusters").watermark("near")
-        == wm_before
-    )
+    assert versions() == before
     inc2 = {
         (r["doc_id"], r["cluster_id"])
         for r in crawl_clusters(spark, root).collect()
@@ -560,31 +497,30 @@ def test_crawl_cluster_maintenance_catches_up_on_preexisting_history(
     assert inc2 == scratch
 
 
-def test_crawl_edges_compaction_keeps_cluster_equality(spark, tmp_path):
-    """maintenance.compact_edges_store must fold only edge batches the
-    incremental labeling already consumed and record the generation as
-    folded; a pre-guard compaction (generation unknown to the progress
-    file) must trigger a one-time rebuild — in BOTH cases the labeling
-    stays literally equal to from-scratch CC over crawl_edges (round-5
-    review: generations were invisible to the `batch_id > wm` catch-up,
-    silently breaking the equality)."""
-    from pyspark.sql import functions as F
+def test_crawl_edges_compaction_keeps_cluster_equality(
+    spark, tmp_path, monkeypatch
+):
+    """Ticks of the table-backed crawl with an offline `compact
+    --crawl-tables` between two of them (it bin-packs the three crawl
+    tables and folds the cluster forwarding table), then a rebuilt
+    near-stage checkpoint: after EVERY tick the incremental labeling
+    equals connected_components(crawl_edges), which equals a
+    from-scratch find_duplicates on the union of the batches."""
+    import shutil
 
-    from simages_spark.maintenance import (
-        compact_batch_partitions,
-        compact_edges_store,
-        list_batch_partitions,
-    )
-    from simages_spark.operators.cluster_state import read_progress
+    from simages_spark.cli import main
     from simages_spark.operators.connected_components import (
         connected_components,
     )
+    from simages_spark.pipeline import find_duplicates
     from simages_spark.streaming import (
         crawl_clusters,
         crawl_edges,
         stream_crawl_dedup,
     )
+    from simages_spark.table import SnapshotTable
 
+    monkeypatch.setattr(spark, "stop", lambda: None)  # main() stops it
     inp = str(tmp_path / "incoming")
     root = str(tmp_path / "crawl")
     os.makedirs(inp, exist_ok=True)
@@ -595,94 +531,52 @@ def test_crawl_edges_compaction_keeps_cluster_equality(spark, tmp_path):
             (f"CHANGED{k}" if i == 4 * k else f"word{i}") for i in range(40)
         )
 
-    def assert_equal_clusters():
-        scratch = {
+    fed = []
+
+    def tick(rows):
+        fed.extend(rows)
+        _write_batch(spark, inp, [(d, t, "en", "s", 0) for d, t in rows])
+        stream_crawl_dedup(spark, inp, root, CFG)
+        inc = {
+            (r["doc_id"], r["cluster_id"])
+            for r in crawl_clusters(spark, root).collect()
+        }
+        loop = {
             (r["doc_id"], r["cluster_id"])
             for r in connected_components(
                 crawl_edges(spark, root), CFG
             ).collect()
         }
-        inc = {
+        scratch = {
             (r["doc_id"], r["cluster_id"])
-            for r in crawl_clusters(spark, root).collect()
+            for r in find_duplicates(
+                spark.createDataFrame(fed, "doc_id long, text string"), CFG
+            ).clusters.collect()
         }
-        assert inc == scratch and scratch
+        assert inc == loop == scratch and scratch
 
-    _write_batch(spark, inp, [(1, base, "en", "s", 0), (2, near(1), "en", "s", 0)])
-    stream_crawl_dedup(spark, inp, root, CFG)
-    _write_batch(spark, inp, [(3, near(2), "en", "s", 0)])
-    stream_crawl_dedup(spark, inp, root, CFG)
-    _write_batch(spark, inp, [(4, near(3), "en", "s", 0)])
-    stream_crawl_dedup(spark, inp, root, CFG)
-    assert_equal_clusters()
+    tick([(1, base), (2, near(1)), (9, "an unrelated page entirely")])
+    tick([(3, near(2)), (10, base)])
 
-    # cluster-aware compaction: folds only consumed batches, records the
-    # generation it creates as folded
-    r = compact_edges_store(spark, f"{root}/edges")
-    assert r["compacted"]
-    assert r["target_batch_id"] in read_progress(
-        f"{root}/clusters", "near"
-    )["gens"]
-
-    # next tick's catch-up sees nothing unknown — labeling survives
-    _write_batch(spark, inp, [(5, near(4), "en", "s", 0)])
-    stream_crawl_dedup(spark, inp, root, CFG)
-    assert_equal_clusters()
-    members_v1 = crawl_clusters(spark, root).count()
-
-    # pre-guard compaction: fold EVERYTHING (including the recorded
-    # generation) into a new generation the progress file cannot know
-    compact_batch_partitions(
-        spark,
-        f"{root}/edges",
-        dedup_cols=["src", "dst"],
-        layout_col="src",
-        eligible=set(list_batch_partitions(spark, f"{root}/edges")),
-    )
-    # the catch-up detects the unknown generation, voids the state, and
-    # refolds every surviving partition + replays the lineage stars
-    _write_batch(spark, inp, [(6, near(5), "en", "s", 0)])
-    stream_crawl_dedup(spark, inp, root, CFG)
-    assert_equal_clusters()
-    assert crawl_clusters(spark, root).count() > members_v1
-
-
-def test_dir_store_incarnation_guard_blocks_checkpoint_wipe(spark, tmp_path):
-    """A wiped-and-rebuilt streaming checkpoint over KEPT dir stores must
-    fail loudly: batch ids restart at 0 and the dynamic partition
-    overwrite would silently destroy the old incarnation's partitions
-    (round-5 review). The table-backed variant re-appends instead — this
-    guard is the dir path's equivalent safety."""
-    import shutil
-
-    import pytest
-
-    from simages_spark.streaming import stream_near_dedup
-
-    inp = str(tmp_path / "in")
-    sig = str(tmp_path / "sig")
-    edg = str(tmp_path / "edges")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(inp, exist_ok=True)
-    base = " ".join(f"word{i}" for i in range(40))
-
-    _write_batch(spark, inp, [(1, base, "en", "s", 0)])
-    stream_near_dedup(spark, inp, sig, edg, ckpt).awaitTermination()
-    before = {
-        (r["doc_id"], r["batch_id"])
-        for r in spark.read.parquet(sig).select("doc_id", "batch_id").collect()
+    versions = {
+        n: SnapshotTable(spark, f"{root}/{n}").current_version()
+        for n in ("sig_table", "idx_table", "edges_table")
     }
-    assert before
+    assert main(["compact", "--crawl-tables", root]) == 0
+    for n, v in versions.items():
+        assert SnapshotTable(spark, f"{root}/{n}").current_version() > v, n
 
-    shutil.rmtree(ckpt)  # the wipe: batch ids will restart at 0
-    with pytest.raises(Exception) as ei:
-        stream_near_dedup(spark, inp, sig, edg, ckpt).awaitTermination()
-    assert "incarnation" in str(ei.value)
-    after = {
-        (r["doc_id"], r["batch_id"])
-        for r in spark.read.parquet(sig).select("doc_id", "batch_id").collect()
+    tick([(4, near(3)), (11, near(1))])
+    tick([(5, near(4))])
+
+    # a rebuilt near checkpoint restarts batch ids at 0: its batches must
+    # be folded into the labeling, not skipped as already seen
+    shutil.rmtree(f"{root}/ckpt_near")
+    tick([(6, near(5))])
+    assert (6, 1) in {
+        (r["doc_id"], r["cluster_id"])
+        for r in crawl_clusters(spark, root).collect()
     }
-    assert after == before  # nothing was overwritten
 
 
 def test_tables_path_skips_empty_micro_batch(spark, tmp_path):

@@ -1,10 +1,12 @@
 """Continuous-crawl loop soak (round-2 verdict item 5 done-criterion at
 scale): a corpus arrives as K successive batches through the streaming
-batch processor (`process_near_dedup_batch` with within-batch edges —
-exactly what `stream_near_dedup` runs per micro-batch), maintaining the
-signature store + probe index incrementally. The cumulative edge set
-must produce the SAME clusters as a from-scratch `find_duplicates` run
-on the full union — the loop needs no second pass, at any batch split.
+batch processor (`process_near_dedup_batch_tables` with within-batch
+edges — exactly what `stream_crawl_dedup` runs per micro-batch),
+maintaining the signature, probe-index and edge tables incrementally,
+with a `SnapshotTable.compact()` of all three mid-loop. The cumulative
+edge set must produce the SAME clusters as a from-scratch
+`find_duplicates` run on the full union — the loop needs no second
+pass, at any batch split.
 
 From-scratch runs exact-first (signatures over representatives + star
 edges); the loop probes per batch. The edge SETS differ by construction
@@ -12,16 +14,18 @@ edges); the loop probes per batch. The edge SETS differ by construction
 contract, and min-label cluster ids make equality literal.
 
 Usage: python tools/soak_crawl_loop.py [total_docs] [n_batches]
+(cores: SPARK_GRAFT_CPUS, default 32)
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -31,7 +35,8 @@ from simages_spark.pipeline import find_duplicates  # noqa: E402
 from simages_spark.session import get_spark  # noqa: E402
 from simages_spark.sources.corpus import generate_pages, mint_doc_ids  # noqa: E402
 from simages_spark.operators.cluster_state import ClusterState  # noqa: E402
-from simages_spark.streaming import process_near_dedup_batch  # noqa: E402
+from simages_spark.streaming import process_near_dedup_batch_tables  # noqa: E402
+from simages_spark.table import SnapshotTable  # noqa: E402
 
 ROOT = "/tmp/soak_crawl"
 
@@ -39,10 +44,13 @@ ROOT = "/tmp/soak_crawl"
 def main() -> None:
     total = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    spark = get_spark("soak_crawl_loop", cores=32)
+    spark = get_spark("soak_crawl_loop")
     cfg = DedupConfig()
     shutil.rmtree(ROOT, ignore_errors=True)
-    sig_dir, idx_dir, edg_dir = f"{ROOT}/sig", f"{ROOT}/idx", f"{ROOT}/edges"
+    tables = {
+        n: SnapshotTable(spark, f"{ROOT}/{n}")
+        for n in ("sig_table", "idx_table", "edges_table")
+    }
 
     # persist: every batch filter and the from-scratch comparison read
     # the corpus — without the cache each one re-runs the generator UDF
@@ -64,8 +72,8 @@ def main() -> None:
             (F.col("doc_id") % k + k) % k == b  # deterministic split
         )
         t0 = time.time()
-        process_near_dedup_batch(
-            batch, b, sig_dir, idx_dir, edg_dir, cfg, include_within_batch=True
+        process_near_dedup_batch_tables(
+            batch, b, ROOT, cfg, include_within_batch=True
         )
         dt = time.time() - t0
         t_loop += dt
@@ -73,8 +81,8 @@ def main() -> None:
         # update on this batch's edges + a labeling read, never a
         # from-scratch CC over history
         t0 = time.time()
-        batch_edges = spark.read.parquet(edg_dir).where(
-            F.col("batch_id") == b
+        batch_edges = tables["edges_table"].scan(
+            [("batch_id", b, b)]
         ).select("src", "dst")
         um = state.update(batch_edges, b, source_id="near", cfg=cfg)
         t_upd = time.time() - t0
@@ -91,21 +99,16 @@ def main() -> None:
         }), flush=True)
         if b == k // 2:
             # mid-loop maintenance (between batches — exactly the
-            # availableNow slot): fold all batch partitions into one
-            # compacted generation; later batches must probe identically
-            from simages_spark.maintenance import (
-                compact_probe_index, compact_signature_store,
-            )
-
+            # availableNow slot of `compact --crawl-tables`): bin-pack
+            # each table's per-batch groups; later batches must probe
+            # identically
             t0 = time.time()
-            ci = compact_probe_index(spark, idx_dir)
-            cs = compact_signature_store(spark, sig_dir)
+            packed = {n: t.compact() for n, t in tables.items()}
             print(json.dumps({
-                "compaction_sec": round(time.time() - t0, 1),
-                "idx": ci, "sig": cs,
+                "compaction_sec": round(time.time() - t0, 1), **packed,
             }), flush=True)
 
-    loop_edges = spark.read.parquet(edg_dir).select("src", "dst", "jaccard")
+    loop_edges = tables["edges_table"].read().select("src", "dst", "jaccard")
     t0 = time.time()
     loop_clusters = connected_components(loop_edges, cfg).persist()
     n_loop = loop_clusters.count()
