@@ -143,6 +143,11 @@ def _refuse_legacy_stage(root: str, name: str) -> None:
         )
 
 
+def _props(table, version: int) -> dict:
+    """The stage metrics committed with `version` of a stage table."""
+    return table.manifest(version).get("props") or {}
+
+
 class TableCheckpointStore:
     """Checkpoint stages as versions of an ACID `SnapshotTable`
     (north_rule: "checkpoints per-partition signature and edge state to
@@ -180,10 +185,17 @@ class TableCheckpointStore:
         _refuse_legacy_stage(self.root, name)
         return SnapshotTable(self.spark, os.path.join(self.root, name))
 
-    def exists(self, name: str) -> bool:
+    def _current(self, name: str):
+        """(table, current version) of stage `name`: one table handle and
+        one version listing; (None, None) when the stage was never
+        written."""
         if not os.path.isdir(os.path.join(self.root, name)):
-            return False
-        return self._table(name).current_version() is not None
+            return None, None
+        t = self._table(name)
+        return t, t.current_version()
+
+    def exists(self, name: str) -> bool:
+        return self._current(name)[1] is not None
 
     def write(
         self,
@@ -244,23 +256,22 @@ class TableCheckpointStore:
         version: int | None = None,
         expected_fingerprint: str | None = None,
     ) -> DataFrame:
-        if not self.exists(name):
+        t, current = self._current(name)
+        if current is None:
             raise FileNotFoundError(
                 f"checkpoint stage '{name}' not found under {self.root} — "
                 f"run the producing stage first"
             )
+        v = current if version is None else version
         if expected_fingerprint is not None:
             _check_fingerprint(
-                name,
-                self.metrics(name, version).get("fingerprint"),
-                expected_fingerprint,
+                name, _props(t, v).get("fingerprint"), expected_fingerprint
             )
-        return self._table(name).read(version).drop("part_id", "stage_run_id")
+        return t.read(v).drop("part_id", "stage_run_id")
 
     def metrics(self, name: str, version: int | None = None) -> dict:
         t = self._table(name)
-        v = t.current_version() if version is None else version
-        return t.manifest(v).get("props") or {}
+        return _props(t, t.current_version() if version is None else version)
 
     def history(self, name: str) -> list[dict]:
         """Full stage lineage: every run's commit properties, oldest
@@ -278,9 +289,12 @@ class TableCheckpointStore:
         run_id: str | None = None,
         fingerprint: str | None = None,
     ) -> DataFrame:
-        if self.exists(name):
-            stored = self.metrics(name).get("fingerprint")
+        # a resume hit opens the stage's table once: one version listing,
+        # one manifest parse (the table caches it for the read)
+        t, v = self._current(name)
+        if v is not None:
+            stored = _props(t, v).get("fingerprint")
             if fingerprint is None or stored == fingerprint:
-                return self.read(name)
+                return t.read(v).drop("part_id", "stage_run_id")
         return self.write(name, compute(), run_id=run_id, fingerprint=fingerprint)
 

@@ -72,9 +72,10 @@ class DedupConfig:
     # path stays cheaper until well past 1M edges, and 1M keeps the
     # collect (16 MB) and the transient Python dicts (~150 MB) far from
     # any driver-memory concern at the default heap (a quarter of the
-    # host's memory, capped at 24g: ~4g on a 16 GB host). Every genuinely
-    # large graph still takes the distributed rounds (asserted by the
-    # 20M-edge soaks); the label-equality gate
+    # host's memory, capped at 24g: ~4g on a 16 GB host). The default
+    # assumes such a multi-GB driver heap; lower it on a small driver.
+    # Every genuinely large graph still takes the distributed rounds
+    # (asserted by the 20M-edge soaks); the label-equality gate
     # (test_fast_path_equals_distributed_random_graph) pins identity.
     cc_driver_threshold: int = 1_000_000
 

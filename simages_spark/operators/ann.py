@@ -167,7 +167,7 @@ def ann_cosine_pairs(
         "vec_id",
         cap=max_bucket_size,
         nsalt=bucket_salt,
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    ).selectExpr("a AS src", "b AS dst")
     base = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
     return (
         cands.join(base.select(F.col("vec_id").alias("src"), F.col("vec").alias("v_src")), "src")

@@ -20,6 +20,9 @@ connectivity through the exact-hash star layer regardless (their
 truncated LSH pairs are redundant); genuinely-near-dup viral clusters
 lose bounded recall. Never silent: `lsh_metrics`/`suffix_metrics` report
 split AND truncated bucket counts.
+
+The pair expressions are SQL text, parsed by the JVM in one call each;
+built with Column builders they cost one py4j round trip per node.
 """
 
 from __future__ import annotations
@@ -27,32 +30,65 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def _bind(col: Column, f) -> Column:
-    """Evaluate `col` ONCE and pass it to `f` as a bound lambda variable.
+def _bind(expr: str, var: str, body: str) -> str:
+    """SQL: evaluate `expr` ONCE and bind it to lambda variable `var`
+    inside `body`.
 
     Poor man's `let`: Spark evaluates a higher-order lambda's input
-    eagerly and binds it as a variable, so references inside `f` are
-    cheap lookups. Without this, every reference to a shared Column
-    re-evaluates its whole expression subtree — `_pairs_of` references
-    its array 3× *per element*, which turns a filter over a 100k-member
-    hot bucket into ~10^8 re-evaluations (measured: 182 s for one viral
-    bucket; ~1 s bound)."""
-    return F.transform(F.array(col), f)[0]
+    eagerly and binds it as a variable, so references inside `body` are
+    cheap lookups. Without this, every reference to a shared expression
+    re-evaluates its whole subtree — `_pairs_of` references its array
+    3× *per element*, which turns a filter over a 100k-member hot bucket
+    into ~10^8 re-evaluations (measured: 182 s for one viral bucket;
+    ~1 s bound)."""
+    return f"transform(array({expr}), {var} -> {body})[0]"
 
 
-def _pairs_of(arr: Column) -> Column:
-    """array<T> (sorted) → array<struct<a:T, b:T>> of all i<j pairs.
+def _pairs_of(arr: str, tag: str = "") -> str:
+    """SQL: array<T> (sorted) → array<struct<a:T, b:T>> of all i<j pairs.
 
     `arr` must be a cheap reference (column or bound lambda variable) —
-    wrap computed expressions in `_bind` first."""
-    return F.flatten(
-        F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + F.lit(2), F.size(arr)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
+    wrap computed expressions in `_bind` first. `tag` suffixes the
+    lambda variables, keeping them distinct from an enclosing lambda's."""
+    x, i, y = f"x{tag}", f"i{tag}", f"y{tag}"
+    return (
+        f"flatten(transform({arr}, ({x}, {i}) -> transform("
+        f"slice({arr}, {i} + 2, size({arr})), {y} -> struct({x} AS a, {y} AS b))))"
+    )
+
+
+def _bucket_pairs_sql(cap: int, nsalt: int) -> str:
+    """SQL: the sorted member array `ids` → array of its (a, b) pairs,
+    salt-split and truncated above `cap` (see `bucket_pairs`).
+
+    One string the JVM parses in one call: written with Column builders
+    the same expression costs hundreds of py4j round trips to build."""
+    # hash each member ONCE (interpreted xxhash64 per element is the unit
+    # cost here — don't pay it nsalt times), then the per-salt filter is a
+    # cheap field compare over the bound array.
+    salt_class = _bind(
+        f"slice(transform(filter(tagged, e -> e.s = s), e -> e.id), 1, {cap})",
+        "members",
+        _pairs_of("members", "_s"),
+    )
+    salted = _bind(
+        f"transform(ids, m -> struct(pmod(xxhash64(m), {nsalt}) AS s, m AS id))",
+        "tagged",
+        f"flatten(transform(sequence(0, {nsalt - 1}), s -> {salt_class}))",
+    )
+    return f"CASE WHEN size(ids) <= {cap} THEN {_pairs_of('ids')} ELSE {salted} END"
+
+
+def _member_arrays(
+    df: DataFrame, key_cols: list[str], member_col: Column | str
+) -> DataFrame:
+    """(keys..., ids): each bucket's sorted distinct members, for buckets
+    of two or more."""
+    member = F.col(member_col) if isinstance(member_col, str) else member_col
+    return (
+        df.groupBy(*key_cols)
+        .agg(F.sort_array(F.collect_set(member)).alias("ids"))
+        .where("size(ids) > 1")
     )
 
 
@@ -80,42 +116,10 @@ def bucket_pairs(
     pipeline's candidate union). With dedup=False the output may contain
     the same (a, b) once per shared bucket.
     """
-    member = F.col(member_col) if isinstance(member_col, str) else member_col
-    grouped = (
-        df.groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_set(member)).alias("ids"))
-        .where(F.size("ids") > 1)
-    )
-    # hash each member ONCE (interpreted xxhash64 per element is the unit
-    # cost here — don't pay it nsalt times), then the per-salt filter is a
-    # cheap field compare over the bound array.
-    salted = _bind(
-        F.transform(
-            F.col("ids"),
-            lambda x: F.struct(
-                F.pmod(F.xxhash64(x), F.lit(nsalt)).alias("s"), x.alias("id")
-            ),
-        ),
-        lambda tagged: F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(nsalt - 1)),
-                lambda s: _bind(
-                    F.slice(
-                        F.transform(
-                            F.filter(tagged, lambda e: e["s"] == s),
-                            lambda e: e["id"],
-                        ),
-                        1,
-                        cap,
-                    ),
-                    _pairs_of,
-                ),
-            )
-        ),
-    )
-    pairs = F.when(F.size("ids") <= cap, _pairs_of(F.col("ids"))).otherwise(salted)
-    out = grouped.select(F.explode(pairs).alias("p")).select(
-        F.col("p.a").alias("a"), F.col("p.b").alias("b")
+    out = (
+        _member_arrays(df, key_cols, member_col)
+        .select(F.expr(f"explode({_bucket_pairs_sql(cap, nsalt)}) AS p"))
+        .selectExpr("p.a AS a", "p.b AS b")
     )
     return out.dropDuplicates(["a", "b"]) if dedup else out
 
@@ -135,17 +139,10 @@ def bucket_star_edges(
     hash: a doc has ONE sha, so every (min, other) edge is emitted by
     exactly one bucket).
     """
-    member = F.col(member_col) if isinstance(member_col, str) else member_col
-    grouped = (
-        df.groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_set(member)).alias("ids"))
-        .where(F.size("ids") > 1)
-    )
-    stars = F.transform(
-        F.slice(F.col("ids"), 2, F.size("ids")),
-        lambda y: F.struct(F.col("ids")[0].alias("a"), y.alias("b")),
-    )
-    out = grouped.select(F.explode(stars).alias("p")).select(
-        F.col("p.a").alias("a"), F.col("p.b").alias("b")
+    stars = "transform(slice(ids, 2, size(ids)), y -> struct(ids[0] AS a, y AS b))"
+    out = (
+        _member_arrays(df, key_cols, member_col)
+        .select(F.expr(f"explode({stars}) AS p"))
+        .selectExpr("p.a AS a", "p.b AS b")
     )
     return out.dropDuplicates(["a", "b"]) if dedup else out

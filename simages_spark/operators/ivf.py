@@ -192,7 +192,7 @@ def ivf_cosine_pairs(
         "vec_id",
         cap=max_cell_size,
         nsalt=cell_salt,
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    ).selectExpr("a AS src", "b AS dst")
     base = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
     )

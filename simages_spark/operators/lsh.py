@@ -31,33 +31,24 @@ def band_keys(
 
     Band keys are computed entirely JVM-side: xxhash64 over the band id and
     the 8-slot minhash slice (xxhash64 natively hashes array columns), so
-    the only Python in the whole candidate path is the signature UDF.
+    the only Python in the whole candidate path is the signature UDF. The
+    band array is one SQL string, parsed by the JVM in one call.
     Empty docs (num_shingles = 0) produce no bands — they can't be
     near-duplicates of anything. `extra_cols` ride through the explode
     (e.g. the probe index carries `simhash` for its Hamming filter) —
     cheaper than a join back on doc_id.
     """
     cfg = cfg or DedupConfig()
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(
-                    F.lit(j), F.slice("minhash", j * cfg.lsh_rows + 1, cfg.lsh_rows)
-                ).alias("band_key"),
-            )
-            for j in range(cfg.lsh_bands)
-        ]
+    r = cfg.lsh_rows
+    bands = ", ".join(
+        f"struct({j} AS band, "
+        f"xxhash64({j}, slice(minhash, {j * r + 1}, {r})) AS band_key)"
+        for j in range(cfg.lsh_bands)
     )
     return (
-        signatures.where(F.col("num_shingles") > 0)
-        .select("doc_id", *extra_cols, F.explode(bands).alias("bk"))
-        .select(
-            "doc_id",
-            F.col("bk.band").alias("band"),
-            F.col("bk.band_key").alias("band_key"),
-            *extra_cols,
-        )
+        signatures.where("num_shingles > 0")
+        .select("doc_id", *extra_cols, F.expr(f"explode(array({bands})) AS bk"))
+        .selectExpr("doc_id", "bk.band AS band", "bk.band_key AS band_key", *extra_cols)
     )
 
 
@@ -88,7 +79,7 @@ def candidate_pairs(
         nsalt=cfg.bucket_salt,
         dedup=dedup,
     )
-    return pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    return pairs.selectExpr("a AS src", "b AS dst")
 
 
 def lsh_metrics(signatures: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:

@@ -33,7 +33,7 @@ index).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from simages_spark.config import DedupConfig
 from simages_spark.operators.lsh import band_keys
@@ -58,19 +58,13 @@ def probe_keys(
     (tools/soak_crawl_loop.py) caught the 0.03% divergence."""
     cfg = cfg or DedupConfig()
     sig = signatures.select("doc_id", "minhash", "simhash", "num_shingles")
-    keys = band_keys(sig, cfg, extra_cols=("simhash",)).select(
-        F.lit(0).alias("kind"),
-        F.xxhash64(F.lit(0), F.col("band"), F.col("band_key")).alias("pkey"),
-        "doc_id",
-        "simhash",
+    keys = band_keys(sig, cfg, extra_cols=("simhash",)).selectExpr(
+        "0 AS kind", "xxhash64(0, band, band_key) AS pkey", "doc_id", "simhash"
     )
     if use_simhash:
         keys = keys.unionByName(
-            simhash_keys(sig, cfg).select(
-                F.lit(1).alias("kind"),
-                F.xxhash64(F.lit(1), F.col("key")).alias("pkey"),
-                "doc_id",
-                "simhash",
+            simhash_keys(sig, cfg).selectExpr(
+                "1 AS kind", "xxhash64(1, key) AS pkey", "doc_id", "simhash"
             )
         )
     return keys

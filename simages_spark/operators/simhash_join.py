@@ -32,32 +32,31 @@ def _piece_widths(bits: int, m: int) -> list[int]:
     return [base + (1 if i < extra else 0) for i in range(m)]
 
 
-def _piece_exprs(col, widths: list[int]):
+def _piece_sql(widths: list[int]) -> list[str]:
+    """SQL for each piece of `simhash`: its bits, shifted down to bit 0."""
     out, shift = [], 0
     for w in widths:
-        out.append(
-            F.shiftrightunsigned(col, shift).bitwiseAND(F.lit((1 << w) - 1))
-        )
+        out.append(f"(shiftrightunsigned(simhash, {shift}) & {(1 << w) - 1})")
         shift += w
     return out
 
 
 def simhash_keys(signatures: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
     """(doc_id, simhash, key) — one row per (m-d)-subset of pieces; `key`
-    packs the combo index and the concatenated piece values into a long."""
+    packs the combo index and the concatenated piece values into a long.
+    The key array is one SQL string, parsed by the JVM in one call."""
     cfg = cfg or DedupConfig()
     m, d = cfg.simhash_blocks, cfg.simhash_max_hamming
     widths = _piece_widths(cfg.simhash_bits, m)
-    pieces = _piece_exprs(F.col("simhash"), widths)
+    pieces = _piece_sql(widths)
     keys = []
     for combo_id, combo in enumerate(combinations(range(m), m - d)):
-        key = F.lit(combo_id).cast("long")
+        key = f"CAST({combo_id} AS BIGINT)"
         for idx in combo:
-            key = F.shiftleft(key, widths[idx]) + pieces[idx]
+            key = f"(shiftleft({key}, {widths[idx]}) + {pieces[idx]})"
         keys.append(key)
-    return (
-        signatures.where(F.col("num_shingles") > 0)
-        .select("doc_id", "simhash", F.explode(F.array(*keys)).alias("key"))
+    return signatures.where("num_shingles > 0").select(
+        "doc_id", "simhash", F.expr(f"explode(array({', '.join(keys)})) AS key")
     )
 
 
@@ -82,23 +81,16 @@ def simhash_candidates(
     cfg = cfg or DedupConfig()
     from simages_spark.operators.buckets import bucket_pairs
 
-    keyed = simhash_keys(signatures, cfg).select(
-        "key", F.struct(F.col("doc_id"), F.col("simhash")).alias("m")
+    keyed = simhash_keys(signatures, cfg).selectExpr(
+        "key", "struct(doc_id, simhash) AS m"
     )
     pairs = bucket_pairs(
         keyed, ["key"], "m", cap=cfg.max_bucket_size, nsalt=cfg.bucket_salt,
         dedup=False,
     )
     out = (
-        pairs.withColumn(
-            "hamming",
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))),
-        )
-        .where(F.col("hamming") <= cfg.simhash_max_hamming)
-        .select(
-            F.col("a.doc_id").alias("src"),
-            F.col("b.doc_id").alias("dst"),
-            "hamming",
-        )
+        pairs.withColumn("hamming", F.expr("bit_count(a.simhash ^ b.simhash)"))
+        .where(f"hamming <= {cfg.simhash_max_hamming}")
+        .selectExpr("a.doc_id AS src", "b.doc_id AS dst", "hamming")
     )
     return out.dropDuplicates(["src", "dst"]) if dedup else out

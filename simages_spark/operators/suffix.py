@@ -330,18 +330,8 @@ def _extend_matches(docs: DataFrame, matches: DataFrame, min_len: int) -> DataFr
         F.collect_list(F.struct("pos_src", "pos_dst")).alias("aligns")
     )
     joined = (
-        grouped.join(
-            texts.select(
-                F.col("doc_id").alias("src"), F.col("text").alias("text_src")
-            ),
-            "src",
-        )
-        .join(
-            texts.select(
-                F.col("doc_id").alias("dst"), F.col("text").alias("text_dst")
-            ),
-            "dst",
-        )
+        grouped.join(texts.selectExpr("doc_id AS src", "text AS text_src"), "src")
+        .join(texts.selectExpr("doc_id AS dst", "text AS text_dst"), "dst")
         .select("src", "dst", "aligns", "text_src", "text_dst")
     )
 
@@ -494,10 +484,16 @@ def _substring_matches(
     counts = anchors.groupBy("h1", "h2").agg(
         F.count_distinct("doc_id").alias("n_docs")
     )
+    # the shared-window counts are the hash-join build side on every
+    # call. With both sides under the broadcast threshold (small inputs)
+    # AQE would otherwise build from whichever side's stage finished
+    # first, so identical calls ran different physical plans and each
+    # flip recompiled their generated classes. Both sides are already
+    # partitioned on (h1, h2): the shuffled hash join adds no exchange.
     eligible = anchors.join(
-        counts.where(
-            (F.col("n_docs") > 1) & (F.col("n_docs") <= max_docs_per_window)
-        ).select("h1", "h2"),
+        counts.where(f"n_docs > 1 AND n_docs <= {max_docs_per_window}")
+        .select("h1", "h2")
+        .hint("shuffle_hash"),
         ["h1", "h2"],
     )
     # bucket_pairs dedup=False: an anchor (doc_id, pos) emits exactly one
@@ -507,21 +503,16 @@ def _substring_matches(
     # collapse duplicates anyway; there are none to collapse.)
     matches = (
         bucket_pairs(
-            eligible.select(
-                "h1", "h2", F.struct("doc_id", "pos").alias("m")
-            ),
+            eligible.selectExpr("h1", "h2", "struct(doc_id, pos) AS m"),
             ["h1", "h2"],
             "m",
             cap=4 * max_docs_per_window,
             nsalt=8,
             dedup=False,
         )
-        .where(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("src"),
-            F.col("b.doc_id").alias("dst"),
-            F.col("a.pos").alias("pos_src"),
-            F.col("b.pos").alias("pos_dst"),
+        .where("a.doc_id != b.doc_id")
+        .selectExpr(
+            "a.doc_id AS src", "b.doc_id AS dst", "a.pos AS pos_src", "b.pos AS pos_dst"
         )
     )
     return _extend_matches(docs, matches, min_len)
@@ -604,18 +595,8 @@ def strip_duplicate_spans(
 
     src_wins = F.col("p_src") < F.col("p_dst")
     cuts = (
-        spans.join(
-            prio.select(
-                F.col("doc_id").alias("src"), F.col("prio").alias("p_src")
-            ),
-            "src",
-        )
-        .join(
-            prio.select(
-                F.col("doc_id").alias("dst"), F.col("prio").alias("p_dst")
-            ),
-            "dst",
-        )
+        spans.join(prio.selectExpr("doc_id AS src", "prio AS p_src"), "src")
+        .join(prio.selectExpr("doc_id AS dst", "prio AS p_dst"), "dst")
         .select(
             F.when(src_wins, F.col("dst")).otherwise(F.col("src")).alias("doc_id"),
             F.when(src_wins, F.col("pos_dst"))

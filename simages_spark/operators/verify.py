@@ -54,17 +54,11 @@ def _jaccard_edges(
     # layouts still elide the exchange under SMJ.
     edges = (
         candidates.join(
-            sets.select(
-                F.col("doc_id").alias("src"),
-                F.col("shingle_hashes").alias("h_src"),
-            ).hint("merge"),
+            sets.selectExpr("doc_id AS src", "shingle_hashes AS h_src").hint("merge"),
             "src",
         )
         .join(
-            sets.select(
-                F.col("doc_id").alias("dst"),
-                F.col("shingle_hashes").alias("h_dst"),
-            ).hint("merge"),
+            sets.selectExpr("doc_id AS dst", "shingle_hashes AS h_dst").hint("merge"),
             "dst",
         )
         # guard the denominator: a pair of zero-shingle docs (null/
@@ -72,14 +66,16 @@ def _jaccard_edges(
         # would yield 0/0 = NaN, and Spark orders NaN ABOVE all doubles so
         # it would silently pass any >= threshold — drop such pairs, same
         # as the oracle's len(shingles) > 0 semantics
-        .where(F.size("h_src") + F.size("h_dst") > 0)
-        .withColumn("n_inter", F.size(F.array_intersect("h_src", "h_dst")))
-        .withColumn(
-            "jaccard",
-            F.col("n_inter")
-            / (F.size("h_src") + F.size("h_dst") - F.col("n_inter")).cast("double"),
+        .where("size(h_src) + size(h_dst) > 0")
+        # one projection: `jaccard` reads `n_inter` as a lateral column
+        # alias, so the intersection is still computed once per pair
+        .selectExpr(
+            "src",
+            "dst",
+            "size(array_intersect(h_src, h_dst)) AS n_inter",
+            "n_inter / CAST(size(h_src) + size(h_dst) - n_inter AS DOUBLE) AS jaccard",
         )
-        .select("src", "dst", "jaccard")
+        .drop("n_inter")
     )
     if threshold is not None:
         edges = edges.where(F.col("jaccard") >= threshold)

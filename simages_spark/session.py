@@ -116,13 +116,19 @@ def driver_java_options(driver_mem: str) -> str:
     )
 
 
+def default_cores() -> int:
+    """Task slots when `get_spark` is not told: `SPARK_GRAFT_CPUS`, else
+    the host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "simages_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or cores
     # resolve driver memory ONCE, honoring an extra_conf override: the
     # -Xms below must track whatever spark.driver.memory ends up being —

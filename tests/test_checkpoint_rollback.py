@@ -79,3 +79,35 @@ def test_read_refuses_cross_config_stage(spark, tmp_path):
     assert store.read("signatures", expected_fingerprint="fpA").count() == 1
     with pytest.raises(ValueError, match="different\\s+config"):
         store.read("signatures", expected_fingerprint="fpB")
+
+
+def test_resume_hit_opens_stage_table_once(spark, tmp_path, monkeypatch):
+    """A `get_or_compute` that finds its stage opens the stage's table
+    once (one version listing, one manifest parse), computes nothing and
+    reads the stored rows; a fingerprint miss writes a new version."""
+    from simages_spark import table
+
+    store = TableCheckpointStore(spark, str(tmp_path / "ck"))
+    df = spark.range(5).withColumnRenamed("id", "doc_id")
+    store.get_or_compute("sig", lambda: df, fingerprint="f1")
+
+    opened = []
+    real_init = table.SnapshotTable.__init__
+
+    def counting_init(self, *args, **kwargs):
+        opened.append(args[1] if len(args) > 1 else kwargs.get("root"))
+        real_init(self, *args, **kwargs)
+
+    monkeypatch.setattr(table.SnapshotTable, "__init__", counting_init)
+
+    def must_not_run():
+        raise AssertionError("a resume hit must not recompute the stage")
+
+    hit = store.get_or_compute("sig", must_not_run, fingerprint="f1")
+    assert sorted(r.doc_id for r in hit.collect()) == [0, 1, 2, 3, 4]
+    assert len(opened) == 1, opened
+
+    opened.clear()
+    store.get_or_compute("sig", lambda: df.where("doc_id < 2"), fingerprint="f2")
+    versions = table.SnapshotTable(spark, str(tmp_path / "ck" / "sig")).history()
+    assert [m["version"] for m in versions] == [0, 1]

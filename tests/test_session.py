@@ -1,6 +1,7 @@
 """Driver-heap and codegen-cache defaults of `get_spark`, checked without
 starting a JVM.
 
+Task slots default to `SPARK_GRAFT_CPUS`, else the host's CPU count.
 The default heap is a quarter of the memory the process may use (the
 smaller of physical memory and its cgroup limit), capped at 24g; an
 `extra_conf["spark.driver.memory"]` wins over `SPARK_DRIVER_MEM`, which
@@ -29,8 +30,10 @@ class _FakeBuilder:
 
     def __init__(self):
         self.conf = {}
+        self.master_url = None
 
-    def master(self, _):
+    def master(self, url):
+        self.master_url = url
         return self
 
     def appName(self, _):
@@ -168,3 +171,22 @@ def test_extra_conf_overrides_codegen_cache(monkeypatch, fake_builder):
         cores=2, extra_conf={"spark.sql.codegen.cache.maxEntries": "64"}
     )
     assert fake_builder.conf["spark.sql.codegen.cache.maxEntries"] == "64"
+
+
+def test_cores_default_to_cpu_count(monkeypatch, fake_builder):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 6)
+    _host(monkeypatch, physical=16 * GIB)
+    session.get_spark()
+    assert fake_builder.master_url == "local[6]"
+    assert fake_builder.conf["spark.sql.shuffle.partitions"] == "6"
+
+
+def test_cores_env_and_argument_override_cpu_count(monkeypatch, fake_builder):
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 6)
+    _host(monkeypatch, physical=16 * GIB)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    session.get_spark()
+    assert fake_builder.master_url == "local[3]"
+    session.get_spark(cores=2)
+    assert fake_builder.master_url == "local[2]"

@@ -13,7 +13,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -26,7 +26,7 @@ from simages_spark.operators.lsh import candidate_pairs  # noqa: E402
 from simages_spark.operators.simhash_join import simhash_candidates  # noqa: E402
 from simages_spark.operators.suffix import substring_dup_pairs  # noqa: E402
 from simages_spark.operators.verify import verify_pairs  # noqa: E402
-from simages_spark.session import get_spark  # noqa: E402
+from simages_spark.session import default_cores, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -35,7 +35,7 @@ def main() -> None:
     tag = os.environ.get("PLAN_TAG", "before")
     os.makedirs(out_dir, exist_ok=True)
     cfg = DedupConfig()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     spark = get_spark("plan_capture", cores=cpus, shuffle_partitions=cpus)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(cpus).persist()
     docs.count()
