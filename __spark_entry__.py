@@ -466,31 +466,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "windowed_event_counts": lambda spark, sf: windowed_event_counts(
             spark.read.parquet(f"{sf}/events.parquet")
         ),
-        # --- relational breadth over the star-schema tables (broadcast
-        # fact⋈dimension joins, partial aggs, keyed windows — the plan
-        # shapes are asserted in tools/explain_audit.py) ---
-        "tpch_pricing_summary": lambda spark, sf: pricing_summary(
-            spark.read.parquet(f"{sf}/lineitem.parquet")
-        ),
-        "tpch_region_revenue": lambda spark, sf: region_revenue(
-            spark.read.parquet(f"{sf}/lineitem.parquet"),
-            spark.read.parquet(f"{sf}/orders.parquet"),
-            spark.read.parquet(f"{sf}/customer.parquet"),
-            spark.read.parquet(f"{sf}/nation.parquet"),
-            spark.read.parquet(f"{sf}/region.parquet"),
-        ),
-        "tpch_top_customers": lambda spark, sf: top_customers(
-            spark.read.parquet(f"{sf}/orders.parquet"),
-            spark.read.parquet(f"{sf}/customer.parquet"),
-            spark.read.parquet(f"{sf}/nation.parquet"),
-        ),
-        "tpch_order_ranks": lambda spark, sf: customer_order_ranks(
-            spark.read.parquet(f"{sf}/orders.parquet")
-        ),
-        "tpch_brand_volume": lambda spark, sf: brand_volume(
-            spark.read.parquet(f"{sf}/lineitem.parquet"),
-            spark.read.parquet(f"{sf}/part.parquet"),
-        ),
         # A7 support — covariance entries (the SQL-checkable half of PCA)
         "embedding_covariance": lambda spark, sf: embedding_covariance(
             _emb(spark, sf), dim=64
@@ -578,6 +553,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 _docs(spark, sf).select("doc_id", _synth_url_col().alias("url"))
             ),
             order_col="doc_id",
+        ),
+        # --- relational breadth over the star-schema tables (broadcast
+        # fact⋈dimension joins, partial aggs, keyed windows — the plan
+        # shapes are asserted in tools/explain_audit.py) ---
+        "tpch_pricing_summary": lambda spark, sf: pricing_summary(
+            spark.read.parquet(f"{sf}/lineitem.parquet")
+        ),
+        "tpch_region_revenue": lambda spark, sf: region_revenue(
+            spark.read.parquet(f"{sf}/lineitem.parquet"),
+            spark.read.parquet(f"{sf}/orders.parquet"),
+            spark.read.parquet(f"{sf}/customer.parquet"),
+            spark.read.parquet(f"{sf}/nation.parquet"),
+            spark.read.parquet(f"{sf}/region.parquet"),
+        ),
+        "tpch_top_customers": lambda spark, sf: top_customers(
+            spark.read.parquet(f"{sf}/orders.parquet"),
+            spark.read.parquet(f"{sf}/customer.parquet"),
+            spark.read.parquet(f"{sf}/nation.parquet"),
+        ),
+        "tpch_order_ranks": lambda spark, sf: customer_order_ranks(
+            spark.read.parquet(f"{sf}/orders.parquet")
+        ),
+        "tpch_brand_volume": lambda spark, sf: brand_volume(
+            spark.read.parquet(f"{sf}/lineitem.parquet"),
+            spark.read.parquet(f"{sf}/part.parquet"),
         ),
     }
 

@@ -27,7 +27,7 @@ from simages_spark.operators.simhash_join import simhash_candidates  # noqa: E40
 from simages_spark.operators.suffix import substring_dup_pairs  # noqa: E402
 from simages_spark.operators.verify import verify_pairs  # noqa: E402
 from simages_spark.pipeline import find_duplicates  # noqa: E402
-from simages_spark.session import get_spark  # noqa: E402
+from simages_spark.session import default_cores, get_spark  # noqa: E402
 
 
 def _run_interleaved(queries, rounds=3):
@@ -65,7 +65,7 @@ def _assert_recomputes(df, must_contain: str, label: str) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     cfg = DedupConfig()
     spark = get_spark("simages_spark_bench", cores=cpus, shuffle_partitions=cpus)
 

@@ -34,7 +34,7 @@ from simages_spark.operators.suffix import (  # noqa: E402
 )
 from simages_spark.operators.verify import verify_pairs  # noqa: E402
 from simages_spark.pipeline import find_duplicates, representative_docs  # noqa: E402
-from simages_spark.session import get_spark  # noqa: E402
+from simages_spark.session import default_cores, get_spark  # noqa: E402
 
 
 def noop(df) -> None:
@@ -46,7 +46,7 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     cfg = DedupConfig()
     spark = get_spark("bench_extra", cores=cpus, shuffle_partitions=cpus)
     sc = spark.sparkContext

@@ -19,7 +19,8 @@ identically to a from-scratch run on the union.
 
 `compact --crawl-tables <root>` is the offline maintenance action for
 long-running crawls (stream_near_dedup_to_tables, stream_crawl_dedup):
-SnapshotTable.compact() on each crawl table, and a fold of the crawl's
+SnapshotTable.compact() on each crawl table (sig_table, idx_table,
+edges_table, lineage_table), and a fold of the crawl's
 incremental cluster labeling (`<root>/clusters`) when it exists.
 
 Every stage checkpoints as a version of an ACID SnapshotTable under
@@ -51,6 +52,9 @@ from simages_spark.operators.lsh import lsh_metrics
 from simages_spark.pipeline import build_candidates, build_edges, representative_docs
 from simages_spark.session import get_spark
 from simages_spark.sources.corpus import ingest as ingest_op, mint_doc_ids
+
+# the SnapshotTables of a crawl root (streaming.stream_crawl_dedup)
+_CRAWL_TABLES = ("sig_table", "idx_table", "edges_table", "lineage_table")
 
 
 def _load_docs(spark, path: str):
@@ -92,7 +96,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--workdir", help="checkpoint root")
     ap.add_argument("--crawl-tables", default=None,
                     help="compact: root of a crawl store (sig_table/ "
-                         "idx_table/ edges_table/ [clusters/] as written "
+                         "idx_table/ edges_table/ [lineage_table/] "
+                         "[clusters/] as written "
                          "by stream_near_dedup_to_tables or "
                          "stream_crawl_dedup); runs SnapshotTable.compact()"
                          " on each table — bin-packs per-batch groups into "
@@ -203,12 +208,12 @@ def main(argv: list[str] | None = None) -> int:
             ap.error("compact requires --crawl-tables")
         if not any(
             os.path.isdir(os.path.join(args.crawl_tables.rstrip("/"), n))
-            for n in ("sig_table", "idx_table", "edges_table", "clusters")
+            for n in (*_CRAWL_TABLES, "clusters")
         ):
             ap.error(
                 f"--crawl-tables {args.crawl_tables!r} contains no crawl "
-                "tables (expected sig_table/ idx_table/ edges_table/ or "
-                "clusters/)"
+                "tables (expected sig_table/ idx_table/ edges_table/ "
+                "lineage_table/ or clusters/)"
             )
     elif args.command == "clear":
         # clearing a checkpoint dir needs no corpus (and no Spark): the
@@ -269,7 +274,7 @@ def main(argv: list[str] | None = None) -> int:
 
         out = {}
         croot = args.crawl_tables.rstrip("/")
-        for name in ("sig_table", "idx_table", "edges_table"):
+        for name in _CRAWL_TABLES:
             # only open tables that exist: SnapshotTable.__init__ mkdirs
             # its layout, and a typo'd --crawl-tables root must error,
             # not fabricate empty skeletons and "succeed"

@@ -1,8 +1,8 @@
 """Shared Hadoop FileSystem helpers (py4j) — ONE home for the
 jvm-Path/getFileSystem dance the streaming module uses to read a
-streaming checkpoint's metadata and to probe sink paths. Correct on any
-Spark-visible filesystem (HDFS/S3A/local), unlike os.path which only
-sees the driver's local FS."""
+streaming checkpoint's metadata. Correct on any Spark-visible filesystem
+(HDFS/S3A/local), unlike os.path which only sees the driver's local
+FS."""
 
 from __future__ import annotations
 
@@ -16,7 +16,3 @@ def hadoop_fs(spark: SparkSession, path: str):
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
 
-
-def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    fs, jpath, _ = hadoop_fs(spark, path)
-    return bool(fs.exists(jpath))

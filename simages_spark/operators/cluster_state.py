@@ -128,10 +128,10 @@ class ClusterState:
     def watermark(self, source_id: str) -> int:
         """Highest batch_id of `source_id` KNOWN folded into the labeling
         (-1 = none). Maintained by callers via `set_watermark` after each
-        `update`; streaming.stream_crawl_dedup uses it to catch up edge
-        batches a checkpoint already consumed before cluster maintenance
-        existed (or while it was disabled) — without it those historical
-        near edges are silently missing and the documented
+        `update`; streaming.stream_crawl_dedup uses it to catch up
+        micro-batches its checkpoint already consumed whose fold did not
+        finish (a crash after the query) — without it those batches'
+        edges are silently missing and the documented
         crawl_clusters == connected_components(crawl_edges) equality
         breaks. Lagging is always safe: re-folding an already-folded
         batch is idempotent (pre-batch-view resolution + exactly-once

@@ -145,7 +145,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # INT96 (Spark's legacy parquet timestamp encoding) carries NO
         # footer min/max statistics, which blinds every stats-pruned path
-        # (SnapshotTable.scan/delete_where) on timestamp columns like
+        # (SnapshotTable.scan) on timestamp columns like
         # warc_ts; TIMESTAMP_MICROS is the modern type, matches Spark's
         # internal precision exactly, and gets stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

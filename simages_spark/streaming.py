@@ -3,20 +3,22 @@
 The reference's batch pipeline is resumable-batch by design (SURVEY.md
 §2.6 keeps streaming out of core scope), but the incremental-add workflow
 (`simages add`, reference: src/simages/duplicate_finder.py:130-139) has a
-natural streaming form: new corpus files land in a directory, signatures
-are computed per micro-batch and appended to the signatures store, and
-the batch dedup stages (candidates → verify → CC) run on the maintained
-table whenever wanted.
+natural streaming form: new corpus files land in a directory, and each
+micro-batch is folded into state that later batches dedup against.
 
-The file source gives exactly-once per-file semantics (checkpointed file
-tracking = the anti-join's dedup role), and the signature UDF is
-stateless, so the stream is just scan → mapInPandas → sink.
+Every stream here that keeps state writes it to ACID `SnapshotTable`s
+through `foreachBatch` + `append_exactly_once`; none uses a file sink
+except the `stream_windowed_event_counts` watermark demo.
 
-The continuous-crawl loop (`stream_near_dedup_to_tables`,
-`stream_crawl_dedup`) keeps its signature, probe-index and edge state in
-three ACID `SnapshotTable`s under its root (`sig_table`, `idx_table`,
-`edges_table`); `process_near_dedup_batch_tables` is one micro-batch of
-it.
+- `stream_signatures_to_table`: signatures per micro-batch, one table
+  version per batch.
+- `stream_near_dedup_to_tables` / `process_near_dedup_batch_tables`: the
+  continuous-crawl near-dup probe; its signature, probe-index and edge
+  state are three tables under its root (`sig_table`, `idx_table`,
+  `edges_table`).
+- `stream_crawl_dedup`: the keep-first exact tier and that probe in ONE
+  streaming query with ONE checkpoint (`<root>/ckpt`); the exact tier's
+  doc → keeper lineage is a fourth table (`lineage_table`).
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ import os
 from typing import Iterator
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -34,29 +35,6 @@ from simages_spark.config import DedupConfig
 from simages_spark.functions.signatures import compute_signatures
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def stream_signatures(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    cfg: DedupConfig | None = None,
-    schema: str = DOCS_SCHEMA,
-) -> StreamingQuery:
-    """Watch `input_dir` for new parquet files; append signatures to
-    `output_dir`. Restart-safe via `checkpoint_dir` (processed-file log)."""
-    cfg = cfg or DedupConfig()
-    incoming = spark.readStream.schema(schema).parquet(input_dir)
-    signatures = compute_signatures(incoming, cfg)
-    return (
-        signatures.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def _streaming_incarnation_id(
@@ -100,8 +78,9 @@ def stream_signatures_to_table(
     cfg: DedupConfig | None = None,
     schema: str = DOCS_SCHEMA,
 ) -> StreamingQuery:
-    """`stream_signatures` with the ACID `SnapshotTable` as the sink:
-    each micro-batch commits as ONE atomic snapshot version tagged with
+    """Watch `input_dir` for new parquet files and append their
+    signatures to the ACID `SnapshotTable` at `table_root`: each
+    micro-batch commits as ONE atomic snapshot version tagged with
     its stream batch id (`append_exactly_once`), so the signature state
     lands in the versioned table with full per-batch lineage — the
     north rule's "checkpoints per-partition signature state to Iceberg"
@@ -110,9 +89,9 @@ def stream_signatures_to_table(
 
     Exactly-once end to end: foreachBatch is at-least-once on retry, but
     a replayed batch id is ≤ the table's recorded high-water mark for
-    this stream and is skipped with one manifest read — the parquet-dir
-    sink's dynamic partition-overwrite trick, re-expressed as a table
-    commit protocol. History doubles as the ingest audit log
+    this stream and is skipped with one manifest read; the file source's
+    checkpointed file log makes each input file one batch's, once.
+    History doubles as the ingest audit log
     (`history()` → one manifest per batch, with `sources` watermarks);
     time travel reads the corpus as of any batch."""
     from simages_spark.table import SnapshotTable
@@ -142,55 +121,6 @@ def stream_signatures_to_table(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API — correct on any
-    Spark-visible filesystem (HDFS/S3A/local), unlike os.path.exists
-    which only sees the driver's local FS (round-2 advice item 1).
-    Delegates to the shared fsutil helper (round-5 review: one home for
-    the FileSystem resolution)."""
-    from simages_spark.fsutil import hadoop_path_exists
-
-    return hadoop_path_exists(spark, path)
-
-
-def _read_data_or_none(spark: SparkSession, path: str):
-    """Read a parquet dir, tolerating BOTH a missing path and a dir that
-    exists but holds no data files — a streaming file sink (the exact
-    tier's `lineage`) creates its output dir at query start, before any
-    data file lands; a bare spark.read.parquet on either raises
-    (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA). Returns None for 'no data
-    yet' so callers report zeros instead of crashing."""
-    if not _hadoop_path_exists(spark, path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        # ONLY the two "no data yet" shapes map to None: an empty dir
-        # (UNABLE_TO_INFER_SCHEMA) and a path deleted between the
-        # existence check and the read (PATH_NOT_FOUND). Anything else —
-        # corrupt footer, permission error, concurrent-compaction
-        # artifact — must FAIL the caller, not silently read as "no
-        # data" (round-4 advice item 1: a masked read error permanently
-        # loses dup edges — here, the lineage's star edges).
-        cls = (
-            e.getCondition()
-            if hasattr(e, "getCondition")
-            else e.getErrorClass()  # pre-4.0 name
-        )
-        # _LEGACY_ERROR_TEMP_1134 is the FileStreamSink-metadata variant
-        # of UNABLE_TO_INFER_SCHEMA ("Unable to infer schema for Parquet")
-        # raised for a streaming sink dir holding _spark_metadata but zero
-        # committed data files (Spark 4.1 still routes that path through
-        # the legacy error template).
-        if cls in (
-            "UNABLE_TO_INFER_SCHEMA",
-            "PATH_NOT_FOUND",
-            "_LEGACY_ERROR_TEMP_1134",
-        ):
-            return None
-        raise
 
 
 def _table_has_batches_below(table, batch_id: int) -> bool:
@@ -334,10 +264,9 @@ def stream_near_dedup_to_tables(
     Exact-copy floods (one page arriving from 10⁵ URLs over many
     batches) would make the probe's store join quadratic in the copy
     count, since every new copy matches all prior copies. The deployment
-    recipe is `stream_crawl_dedup`, which composes
-    `stream_dedup_exact(emit_copies=True)` UPSTREAM, so the probe sees
-    each distinct text once, exactly like `representative_docs` at batch
-    scale."""
+    recipe is `stream_crawl_dedup`, which runs the keep-first lineage
+    operator UPSTREAM in the same query, so the probe sees each distinct
+    text once, exactly like `representative_docs` at batch scale."""
     cfg = cfg or DedupConfig()
     incoming = spark.readStream.schema(schema).parquet(input_dir)
     state: dict[str, str] = {}
@@ -456,8 +385,8 @@ def _keep_first_lineage_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """Per text_sha: emit EVERY doc with its keeper attribution — the
-    exact-copy lineage the composed crawl recipe folds into jaccard-1.0
-    star edges. State is the keeper's doc_id. Exactly one row across the
+    exact-copy lineage `stream_crawl_dedup` folds into jaccard-1.0 star
+    edges. State is the keeper's doc_id. Exactly one row across the
     whole stream carries non-null text (the keeper, in the batch that
     minted it) — that row is what feeds the near-dup stage, so a flood
     of 10⁵ copies contributes 10⁵ tiny lineage rows but ONE probe doc."""
@@ -493,18 +422,25 @@ def _keep_first_lineage_fn(
     yield out
 
 
+def _hashed_docs(incoming):
+    """Docs with non-empty text, keyed by content hash — the exact tier's
+    input (null/empty text never reaches the state store)."""
+    return incoming.where(
+        F.col("text").isNotNull() & (F.trim("text") != "")
+    ).withColumn("text_sha", F.sha2("text", 256))
+
+
 def stream_dedup_exact(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
     schema: str = DOCS_SCHEMA,
-    emit_copies: bool = False,
 ) -> StreamingQuery:
     """Streaming exact dedup — the custom stateful operator the batch
     pipeline can't express: as docs arrive, emit the first occurrence
-    of each content hash (keeper) and — by default — drop all later
-    exact copies, across micro-batch boundaries.
+    of each content hash (keeper) and drop all later exact copies,
+    across micro-batch boundaries.
 
     `applyInPandasWithState` keyed on sha2(text): keyed state is
     checkpointed with the stream, so a restart resumes with the same
@@ -512,32 +448,17 @@ def stream_dedup_exact(
     (reference: src/simages/duplicate_finder.py:403-409) as a streaming
     operator. At cluster scale the state store shards by key across
     executors (RocksDB-backed state store in production configs).
-
-    With `emit_copies`, every doc is emitted with its keeper attribution
-    (schema `LINEAGE_SCHEMA`; only the keeper row carries text) — the
-    upstream half of `stream_crawl_dedup`, whose copy rows become the
-    exact tier's star edges.
+    `stream_crawl_dedup` runs the same keying with a lineage output
+    (every doc with its keeper) instead.
     """
     incoming = spark.readStream.schema(schema).parquet(input_dir)
-    hashed = incoming.where(
-        F.col("text").isNotNull() & (F.trim("text") != "")
-    ).withColumn("text_sha", F.sha2("text", 256))
-    if emit_copies:
-        keepers = hashed.groupBy("text_sha").applyInPandasWithState(
-            _keep_first_lineage_fn,
-            outputStructType=LINEAGE_SCHEMA,
-            stateStructType="keeper_id long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    else:
-        keepers = hashed.groupBy("text_sha").applyInPandasWithState(
-            _keep_first_state_fn,
-            outputStructType="doc_id long, text_sha string",
-            stateStructType="seen boolean",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    keepers = _hashed_docs(incoming).groupBy("text_sha").applyInPandasWithState(
+        _keep_first_state_fn,
+        outputStructType="doc_id long, text_sha string",
+        stateStructType="seen boolean",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
     return (
         keepers.writeStream.format("parquet")
         .option("path", output_dir)
@@ -548,166 +469,162 @@ def stream_dedup_exact(
     )
 
 
+def _star_edges(lineage):
+    """(src, dst) copy → keeper edges of lineage rows."""
+    return lineage.where(F.col("doc_id") != F.col("keeper_id")).select(
+        F.col("doc_id").alias("src"), F.col("keeper_id").alias("dst")
+    )
+
+
+# directories of the earlier three-query crawl layout (partition-dir
+# stores, the lineage file sink and its per-stage checkpoints)
+_OLD_CRAWL_DIRS = (
+    "sig", "idx", "edges", "lineage", "ckpt_exact", "ckpt_near", "ckpt_star"
+)
+
+
 def stream_crawl_dedup(
     spark: SparkSession,
     input_dir: str,
     root: str,
     cfg: DedupConfig | None = None,
     schema: str = DOCS_SCHEMA,
-    maintain_clusters: bool = True,
 ) -> dict:
-    """The composed continuous-crawl recipe (round-3 verdict "missing"
-    item 3, previously documented-but-untested): exact keep-first dedup
-    UPSTREAM, near-dup probe DOWNSTREAM, chained availableNow runs.
+    """The composed continuous-crawl recipe: exact keep-first dedup and
+    the near-dup probe in ONE `foreachBatch` query over the keep-first
+    stateful output, checkpointed at `root/ckpt`.
 
-        incoming → stream_dedup_exact(emit_copies)  → root/lineage
-        lineage keepers (text != null) → near-dup probe → root/edges_table
-                                                root/sig_table, root/idx_table
+        incoming → keep-first lineage (keyed state on sha2(text))
+          per micro-batch:
+            every row (doc → keeper)       → root/lineage_table
+            keeper rows (text != null)     → near-dup probe
+                                             → root/edges_table,
+                                               root/sig_table, root/idx_table
 
-    The probe stage is `process_near_dedup_batch_tables` with
-    within-batch edges, so the crawl's state is three SnapshotTables with
-    the same retry and maintenance contract (`compact --crawl-tables`).
+    Both writes are `append_exactly_once` under the checkpoint's
+    incarnation id, so a replayed micro-batch skips whatever already
+    committed. The micro-batch frame is persisted and materialized once
+    before either write: the keyed state only advances when that frame
+    executes, so it must run exactly once per batch even when the lineage
+    append is skipped as a replay. All four tables share the retry and
+    maintenance contract of `process_near_dedup_batch_tables`
+    (`compact --crawl-tables`).
 
     An exact-copy flood (one page from 10⁵ URLs across many batches)
     stays LINEAR end-to-end: each copy is one keyed-state lookup + one
-    16-byte lineage row upstream, and exactly one doc per distinct text
-    ever reaches the probe — the probe's store join never sees two rows
-    of the same text, so the quadratic copy-vs-copy candidate explosion
-    is structurally impossible (tests/test_streaming.py asserts the
-    probe-side signature store holds one row per distinct text;
-    tools/soak_flood.py measures linearity at scale).
+    (doc_id, keeper_id, batch_id) lineage row, and exactly one doc per
+    distinct text ever reaches the probe — the probe's store join never
+    sees two rows of the same text, so the quadratic copy-vs-copy
+    candidate explosion is structurally impossible
+    (tests/test_streaming.py asserts the probe-side signature store holds
+    one row per distinct text; tools/soak_flood.py measures linearity at
+    scale).
 
-    Full duplicate clusters: with `maintain_clusters` (default) the loop
-    keeps an INCREMENTAL labeling under `root/clusters` — per near-edge
-    batch, only the new edges are contracted through the existing labels
-    and a small CC runs (operators/cluster_state.py; round-4 verdict
-    "missing" item 1: this was the last per-tick cost that grew with
-    total history). Read it with `crawl_clusters(spark, root)` — provably
-    equal to feeding ALL historical edges (`crawl_edges`) to a
-    from-scratch `connected_components`, which remains available as the
-    stateless-read fallback. Call again as new files land: all stages
-    resume from their checkpoints under `root/`.
+    Full duplicate clusters: after the query, every micro-batch of this
+    checkpoint incarnation that the labeling under `root/clusters` has
+    not folded yet — up to `lineage_table`'s high-water mark, which
+    advances on batches of copies only too — is folded into it as that
+    batch's near edges ∪ star edges (doc → keeper), contracted through
+    the existing labels (operators/cluster_state.py). Read it with
+    `crawl_clusters(spark, root)` — equal to a from-scratch
+    `connected_components(crawl_edges(spark, root))`. The fold is
+    idempotent, so a crash in it heals on the next call. Call again as
+    new files land: the query resumes from `root/ckpt`.
+
+    Returns `lineage_rows` and `probe_docs`, read from manifest stats
+    (no Spark job). A root holding the earlier layout (partition-dir
+    stores, the `lineage/` file sink or its per-stage checkpoints) is
+    refused.
     """
+    from simages_spark.operators.cluster_state import ClusterState
     from simages_spark.table import SnapshotTable
 
     cfg = cfg or DedupConfig()
-    if any(os.path.isdir(f"{root}/{d}") for d in ("sig", "idx", "edges")):
+    old = [d for d in _OLD_CRAWL_DIRS if os.path.isdir(f"{root}/{d}")]
+    if old:
         raise ValueError(
-            f"crawl root {root} holds the old partition-directory stores "
-            "(sig/ idx/ edges/), which this build no longer reads — start "
-            "the crawl under a fresh root"
+            f"crawl root {root} holds {', '.join(d + '/' for d in old)} "
+            "from an earlier crawl layout, which this build no longer "
+            "reads — start the crawl under a fresh root"
         )
-    lineage_dir = f"{root}/lineage"
-    q1 = stream_dedup_exact(
-        spark,
-        input_dir,
-        lineage_dir,
-        f"{root}/ckpt_exact",
-        schema=schema,
-        emit_copies=True,
+    ckpt = f"{root}/ckpt"
+    lineage = (
+        _hashed_docs(spark.readStream.schema(schema).parquet(input_dir))
+        .groupBy("text_sha")
+        .applyInPandasWithState(
+            _keep_first_lineage_fn,
+            outputStructType=LINEAGE_SCHEMA,
+            stateStructType="keeper_id long",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    q1.awaitTermination()
-
-    keepers = (
-        spark.readStream.schema(LINEAGE_SCHEMA)
-        .parquet(lineage_dir)
-        .where(F.col("text").isNotNull())
-    )
-    ckpt_near = f"{root}/ckpt_near"
     state: dict[str, str] = {}
 
     def process(batch_df, batch_id: int) -> None:
+        ss = batch_df.sparkSession
         if "sid" not in state:
-            state["sid"] = "crawl:" + _streaming_incarnation_id(
-                batch_df.sparkSession, ckpt_near, root
+            state["sid"] = "crawl:" + _streaming_incarnation_id(ss, ckpt, root)
+        rows = batch_df.persist()
+        try:
+            if rows.count() == 0:
+                return
+            SnapshotTable(ss, f"{root}/lineage_table").append_exactly_once(
+                rows.select(
+                    "doc_id", "keeper_id", F.lit(batch_id).alias("batch_id")
+                ),
+                state["sid"],
+                batch_id,
             )
-        process_near_dedup_batch_tables(
-            batch_df,
-            batch_id,
-            root,
-            cfg,
-            include_within_batch=True,
-            source_id=state["sid"],
-        )
+            process_near_dedup_batch_tables(
+                rows.where(F.col("text").isNotNull()),
+                batch_id,
+                root,
+                cfg,
+                include_within_batch=True,
+                source_id=state["sid"],
+            )
+        finally:
+            rows.unpersist()
 
-    q2 = (
-        keepers.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt_near)
+    (
+        lineage.writeStream.foreachBatch(process)
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q2.awaitTermination()
 
+    lineage_t = SnapshotTable(spark, f"{root}/lineage_table")
     sig_t = SnapshotTable(spark, f"{root}/sig_table")
-    if maintain_clusters:
-        from simages_spark.operators.cluster_state import ClusterState
-
-        cstate = ClusterState(spark, f"{root}/clusters")
-        # fold every near-edge batch of this checkpoint incarnation the
-        # labeling has not seen: this tick's batches, and any a tick
-        # with maintenance off already consumed. Keyed on the
-        # incarnation, a rebuilt ckpt_near (batch ids restart at 0)
-        # folds its batches instead of skipping them as old. Folding
-        # is idempotent, so a crash mid-loop heals on the next call.
-        sid = "crawl:" + _streaming_incarnation_id(spark, ckpt_near, root)
-        v = sig_t.current_version()
-        last = (
-            int((sig_t.manifest(v).get("sources") or {}).get(sid, -1))
-            if v is not None
-            else -1
-        )
-        wm = cstate.watermark(sid)
-        if last > wm:
-            edges_t = SnapshotTable(spark, f"{root}/edges_table")
-            pending = edges_t.scan([("batch_id", wm + 1, last)])
-            for b in sorted(
-                r["batch_id"]
-                for r in pending.select("batch_id").distinct().collect()
-            ):
-                cstate.update(
-                    edges_t.scan([("batch_id", b, b)]).select("src", "dst"),
-                    b,
-                    source_id=sid,
-                    cfg=cfg,
-                )
-                cstate.set_watermark(sid, b)
-            cstate.set_watermark(sid, last)
-
-        # third chained stage: the lineage's exact-copy star edges
-        # (copy → keeper) stream into the same labeling under their own
-        # checkpoint + source id. Order vs the near stage is irrelevant —
-        # component-min merging is confluent.
-        all_lineage = spark.readStream.schema(LINEAGE_SCHEMA).parquet(
-            lineage_dir
-        )
-
-        def process_star(batch_df, batch_id: int) -> None:
-            star = batch_df.where(
-                F.col("doc_id") != F.col("keeper_id")
-            ).select(
-                F.col("doc_id").alias("src"),
-                F.col("keeper_id").alias("dst"),
-            )
-            cstate.update(star, batch_id, source_id="star", cfg=cfg)
-
-        q3 = (
-            all_lineage.writeStream.foreachBatch(process_star)
-            .option("checkpointLocation", f"{root}/ckpt_star")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q3.awaitTermination()
-    # first tick on an empty incoming dir: zero batches ran, but the
-    # file sink still CREATES lineage_dir at query start (with no data
-    # files) — _read_data_or_none treats that like a missing dir, so an
-    # early cron tick reports zeros instead of crashing on schema
-    # inference
-    lineage = _read_data_or_none(spark, lineage_dir)
+    cstate = ClusterState(spark, f"{root}/clusters")
+    sid = "crawl:" + _streaming_incarnation_id(spark, ckpt, root)
+    v = lineage_t.current_version()
+    last = (
+        int((lineage_t.manifest(v).get("sources") or {}).get(sid, -1))
+        if v is not None
+        else -1
+    )
+    # keyed on the incarnation: a rebuilt ckpt (batch ids restart at 0)
+    # folds its batches instead of skipping them as old
+    wm = cstate.watermark(sid)
+    if last > wm:
+        edges_t = SnapshotTable(spark, f"{root}/edges_table")
+        has_near = edges_t.current_version() is not None
+        pending = lineage_t.scan([("batch_id", wm + 1, last)])
+        batch_ids = pending.select("batch_id").distinct().collect()
+        for b in sorted(r["batch_id"] for r in batch_ids):
+            batch = [("batch_id", b, b)]
+            edges = _star_edges(lineage_t.scan(batch))
+            if has_near:
+                near = edges_t.scan(batch).select("src", "dst")
+                edges = near.unionByName(edges)
+            cstate.update(edges, b, source_id=sid, cfg=cfg)
+            cstate.set_watermark(sid, b)
+        cstate.set_watermark(sid, last)
     return {
-        "lineage_rows": lineage.count() if lineage is not None else 0,
-        "probe_docs": (
-            sig_t.read().count() if sig_t.current_version() is not None else 0
-        ),
+        "lineage_rows": lineage_t.manifest_row_count() or 0,
+        "probe_docs": sig_t.manifest_row_count() or 0,
     }
 
 
@@ -717,23 +634,24 @@ def crawl_edges(spark: SparkSession, root: str):
     twin of the batch pipeline's exact-first edge union."""
     from simages_spark.table import SnapshotTable
 
-    lineage = _read_data_or_none(spark, f"{root}/lineage")
-    star = (
-        lineage.where(F.col("doc_id") != F.col("keeper_id")).select(
-            F.col("doc_id").alias("src"),
-            F.col("keeper_id").alias("dst"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        if lineage is not None
-        else spark.createDataFrame([], "src long, dst long, jaccard double")
-    )
-    # isdir first: opening a SnapshotTable creates its layout, and a read
-    # must not fabricate an empty table on a fresh root
-    if os.path.isdir(f"{root}/edges_table"):
-        near = SnapshotTable(spark, f"{root}/edges_table")
-        if near.current_version() is not None:
-            return near.read().select("src", "dst", "jaccard").unionByName(star)
-    return star
+    parts = []
+    for name in ("edges_table", "lineage_table"):
+        # isdir first: opening a SnapshotTable creates its layout, and a
+        # read must not fabricate an empty table on a fresh root
+        if not os.path.isdir(f"{root}/{name}"):
+            continue
+        t = SnapshotTable(spark, f"{root}/{name}")
+        if t.current_version() is None:
+            continue
+        if name == "edges_table":
+            parts.append(t.read().select("src", "dst", "jaccard"))
+        else:
+            parts.append(
+                _star_edges(t.read()).withColumn("jaccard", F.lit(1.0))
+            )
+    if not parts:
+        return spark.createDataFrame([], "src long, dst long, jaccard double")
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 def crawl_clusters(spark: SparkSession, root: str):
@@ -742,8 +660,7 @@ def crawl_clusters(spark: SparkSession, root: str):
     scan + a broadcast forward join, instead of re-running connected
     components over `crawl_edges`' full history. Equal by construction
     (and by tests/soaks) to
-    `connected_components(crawl_edges(spark, root))` whenever the loop
-    ran with `maintain_clusters=True`."""
+    `connected_components(crawl_edges(spark, root))`."""
     from simages_spark.operators.cluster_state import ClusterState
 
     return ClusterState(spark, f"{root}/clusters").clusters()

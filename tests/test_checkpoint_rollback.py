@@ -1,34 +1,11 @@
 """Checkpoint staleness guards (per-stage fingerprints, the consumer-side
-cross-config refusal) and the narrowed 'no data yet' exception handling
-in the streaming reads.
+cross-config refusal) and the one-open resume path.
 """
 from __future__ import annotations
 
 import pytest
 
 from simages_spark.checkpoint import TableCheckpointStore
-from simages_spark.streaming import _read_data_or_none
-
-
-def test_read_data_or_none_only_masks_no_data(spark, tmp_path):
-    """None for missing path and schema-less dir; a corrupt data file
-    must RAISE (round-4 advice item 1 — a masked read error silently
-    drops cross-corpus dup edges forever)."""
-    missing = str(tmp_path / "missing")
-    assert _read_data_or_none(spark, missing) is None
-
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert _read_data_or_none(spark, str(empty)) is None
-
-    corrupt = tmp_path / "corrupt"
-    corrupt.mkdir()
-    (corrupt / "part-00000.snappy.parquet").write_bytes(b"not a parquet file")
-    with pytest.raises(Exception):
-        df = _read_data_or_none(spark, str(corrupt))
-        # schema inference may be lazy for a single file — force it
-        if df is not None:
-            df.collect()
 
 
 def test_per_stage_fingerprints_scope_invalidation(spark, tmp_path):

@@ -1,13 +1,12 @@
-"""Streaming incremental signature maintenance: new files → new
-signatures, exactly once, identical to the batch computation."""
+"""Streaming incremental maintenance: new files → new signatures and
+crawl state in SnapshotTables, exactly once, identical to the batch
+computation."""
 
 from __future__ import annotations
 
 import os
 
 from simages_spark.config import DedupConfig
-from simages_spark.functions.signatures import compute_signatures
-from simages_spark.streaming import stream_signatures
 
 CFG = DedupConfig()
 
@@ -16,39 +15,6 @@ def _write_batch(spark, path, rows):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("append").parquet(path)
-
-
-def test_stream_signatures_incremental(spark, tmp_path):
-    inp = str(tmp_path / "incoming")
-    out = str(tmp_path / "signatures")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(inp, exist_ok=True)
-
-    _write_batch(spark, inp, [(1, "a b c d e f g", "en", "s", 13),
-                              (2, "h i j k l m n", "en", "s", 13)])
-    q = stream_signatures(spark, inp, out, ckpt, CFG)
-    q.awaitTermination()
-    got1 = spark.read.parquet(out)
-    assert got1.count() == 2
-
-    # second drop: only the new file is processed (exactly-once per file —
-    # the streaming analog of the ingest anti-join, duplicate_finder.py:118-127)
-    _write_batch(spark, inp, [(3, "o p q r s t u", "en", "s", 13)])
-    q2 = stream_signatures(spark, inp, out, ckpt, CFG)
-    q2.awaitTermination()
-    got2 = spark.read.parquet(out)
-    assert got2.count() == 3
-    assert {r["doc_id"] for r in got2.collect()} == {1, 2, 3}
-
-    # streamed signatures == batch signatures (same UDF, same values)
-    batch = {
-        r["doc_id"]: tuple(r["minhash"])
-        for r in compute_signatures(
-            spark.read.parquet(inp), CFG
-        ).collect()
-    }
-    streamed = {r["doc_id"]: tuple(r["minhash"]) for r in got2.collect()}
-    assert streamed == batch
 
 
 def test_stream_windowed_counts_watermark(spark, tmp_path):
@@ -140,10 +106,8 @@ def test_stream_dedup_exact_stateful(spark, tmp_path):
 
 def test_stream_crawl_dedup_empty_input_reports_zeros(spark, tmp_path):
     """A cron tick that fires before any crawl files land must report
-    zeros, not crash: the file sink creates the lineage dir at query
-    start (zero data files), so a bare parquet read of it would raise
-    UNABLE_TO_INFER_SCHEMA. crawl_edges on the fresh root must likewise
-    return an empty edge set."""
+    zeros, not crash, and crawl_edges on the fresh root must return an
+    empty edge set. A root in an earlier layout is refused."""
     from simages_spark.streaming import crawl_edges, stream_crawl_dedup
 
     inp = str(tmp_path / "incoming")
@@ -160,14 +124,16 @@ def test_stream_crawl_dedup_empty_input_reports_zeros(spark, tmp_path):
     out = stream_crawl_dedup(spark, inp, root, CFG)
     assert out["lineage_rows"] == 2 and out["probe_docs"] == 1
 
-    # a root holding the old partition-directory stores is refused, not
-    # silently restarted beside them
+    # a root holding an earlier layout (the partition-directory stores,
+    # or the three-query crawl's lineage file sink and per-stage
+    # checkpoints) is refused, not silently restarted beside it
     import pytest
 
-    legacy = tmp_path / "legacy_crawl"
-    (legacy / "edges").mkdir(parents=True)
-    with pytest.raises(ValueError, match="fresh root"):
-        stream_crawl_dedup(spark, inp, str(legacy), CFG)
+    for i, old in enumerate(("edges", "lineage", "ckpt_near", "ckpt_star")):
+        legacy = tmp_path / f"legacy_crawl{i}"
+        (legacy / old).mkdir(parents=True)
+        with pytest.raises(ValueError, match="fresh root"):
+            stream_crawl_dedup(spark, inp, str(legacy), CFG)
 
 
 def test_stream_crawl_dedup_flood_and_cluster_equality(spark, tmp_path):
@@ -212,6 +178,12 @@ def test_stream_crawl_dedup_flood_and_cluster_equality(spark, tmp_path):
 
     sig = SnapshotTable(spark, f"{root}/sig_table").read()
     assert sig.where(F.col("doc_id") >= 100).count() == 1  # flood keeper only
+    lineage = SnapshotTable(spark, f"{root}/lineage_table").read()
+    assert lineage.count() == n_docs
+
+    # one streaming query: the root holds ONE checkpoint and no file sink
+    assert sorted(d for d in os.listdir(root) if "ckpt" in d) == ["ckpt"]
+    assert not os.path.exists(f"{root}/lineage")
 
     # cluster equality vs from-scratch on the union
     docs = spark.createDataFrame(
@@ -426,17 +398,21 @@ def test_stream_to_table_checkpoint_rebuild_not_skipped(spark, tmp_path):
     assert all(man["sources"][s] == 0 for s in incarnations)
 
 
-def test_crawl_cluster_maintenance_catches_up_on_preexisting_history(
-    spark, tmp_path
-):
-    """Upgrade/toggle path (round-5 review finding): a crawl root whose
-    near-edge batches were already consumed by ckpt_near BEFORE cluster
-    maintenance was enabled must fold that history on the next call —
-    otherwise crawl_clusters silently misses historical near edges while
-    the star stage replays all lineage, splitting clusters the stateless
-    connected_components(crawl_edges) fallback merges."""
-    from pyspark.sql import functions as F
+def _clusters(df):
+    return {(r["doc_id"], r["cluster_id"]) for r in df.collect()}
 
+
+def test_crawl_cluster_maintenance_catches_up_on_preexisting_history(
+    spark, tmp_path, monkeypatch
+):
+    """A crash in the cluster fold after the query committed its batch
+    (checkpoint, lineage and probe tables all advanced) must not lose
+    that batch's edges: the next call folds every batch above the
+    labeling's watermark, so crawl_clusters catches up with
+    connected_components(crawl_edges)."""
+    import pytest
+
+    from simages_spark.operators.cluster_state import ClusterState
     from simages_spark.operators.connected_components import (
         connected_components,
     )
@@ -454,56 +430,97 @@ def test_crawl_cluster_maintenance_catches_up_on_preexisting_history(
     near = " ".join(("X" if i == 7 else f"tok{i}") for i in range(40))
     near2 = " ".join(("Y" if i == 31 else f"tok{i}") for i in range(40))
 
-    # tick 1 WITHOUT maintenance: ckpt_near advances past a batch whose
-    # near edge (1↔2) never reaches any cluster state
+    # tick 1: the fold crashes once, after the query's commits
+    real_update = ClusterState.update
+    calls = []
+
+    def crash_once(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash in the cluster fold")
+        return real_update(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClusterState, "update", crash_once)
     _write_batch(spark, inp, [
         (1, base, "en", "s", 0), (2, near, "en", "s", 0),
+        (5, base, "en", "s", 0),
         (9, "an unrelated page entirely", "en", "s", 0),
     ])
-    stream_crawl_dedup(spark, inp, root, CFG, maintain_clusters=False)
-    assert not os.path.exists(f"{root}/clusters/members")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        stream_crawl_dedup(spark, inp, root, CFG)
+    assert _clusters(crawl_clusters(spark, root)) == set()
 
-    # tick 2 WITH maintenance: the catch-up must fold batch 1's edges
-    # before processing the new batch (3 joins the same cluster)
+    # tick 2 heals: batch 0's near edge 1↔2 and star edge 5→1 are folded
+    # with the new batch (3 joins the same cluster)
     _write_batch(spark, inp, [(3, near2, "en", "s", 0)])
-    stream_crawl_dedup(spark, inp, root, CFG, maintain_clusters=True)
-
-    scratch = {
-        (r["doc_id"], r["cluster_id"])
-        for r in connected_components(crawl_edges(spark, root), CFG).collect()
-    }
-    inc = {
-        (r["doc_id"], r["cluster_id"])
-        for r in crawl_clusters(spark, root).collect()
-    }
+    stream_crawl_dedup(spark, inp, root, CFG)
+    scratch = _clusters(connected_components(crawl_edges(spark, root), CFG))
+    inc = _clusters(crawl_clusters(spark, root))
     assert inc == scratch
-    assert {(1, 1), (2, 1), (3, 1)} <= inc
+    assert {(1, 1), (2, 1), (3, 1), (5, 1)} <= inc
 
     # a third tick (no new files) is a no-op: the watermark prevents
     # refolds, so the labeling commits no new version
-    from simages_spark.operators.cluster_state import ClusterState
-
     def versions():
         st = ClusterState(spark, f"{root}/clusters")
         return st.members.current_version(), st.forward.current_version()
 
     before = versions()
-    stream_crawl_dedup(spark, inp, root, CFG, maintain_clusters=True)
+    stream_crawl_dedup(spark, inp, root, CFG)
     assert versions() == before
-    inc2 = {
-        (r["doc_id"], r["cluster_id"])
-        for r in crawl_clusters(spark, root).collect()
-    }
-    assert inc2 == scratch
+    assert _clusters(crawl_clusters(spark, root)) == scratch
+
+
+def test_crawl_copy_only_tick_folds_star_edges(spark, tmp_path):
+    """A tick whose batch holds only copies of earlier texts mints no
+    keeper, so it commits nothing to sig_table or edges_table — but its
+    star edges (copy → keeper) must still reach the labeling."""
+    from simages_spark.operators.connected_components import (
+        connected_components,
+    )
+    from simages_spark.pipeline import find_duplicates
+    from simages_spark.streaming import (
+        crawl_clusters,
+        crawl_edges,
+        stream_crawl_dedup,
+    )
+    from simages_spark.table import SnapshotTable
+
+    inp = str(tmp_path / "incoming")
+    root = str(tmp_path / "crawl")
+    os.makedirs(inp, exist_ok=True)
+    base = " ".join(f"word{i}" for i in range(40))
+    other = "a second page that shares nothing with the first one"
+    fed = [(1, base), (2, other)]
+    _write_batch(spark, inp, [(d, t, "en", "s", 0) for d, t in fed])
+    stream_crawl_dedup(spark, inp, root, CFG)
+    sig_v = SnapshotTable(spark, f"{root}/sig_table").current_version()
+
+    copies = [(7, base), (8, other), (9, base)]
+    fed += copies
+    _write_batch(spark, inp, [(d, t, "en", "s", 0) for d, t in copies])
+    out = stream_crawl_dedup(spark, inp, root, CFG)
+    assert out == {"lineage_rows": 5, "probe_docs": 2}
+    assert SnapshotTable(spark, f"{root}/sig_table").current_version() == sig_v
+
+    inc = _clusters(crawl_clusters(spark, root))
+    loop = _clusters(connected_components(crawl_edges(spark, root), CFG))
+    scratch = _clusters(
+        find_duplicates(
+            spark.createDataFrame(fed, "doc_id long, text string"), CFG
+        ).clusters
+    )
+    assert inc == loop == scratch
+    assert scratch == {(1, 1), (7, 1), (9, 1), (2, 2), (8, 2)}
 
 
 def test_crawl_edges_compaction_keeps_cluster_equality(
     spark, tmp_path, monkeypatch
 ):
     """Ticks of the table-backed crawl with an offline `compact
-    --crawl-tables` between two of them (it bin-packs the three crawl
+    --crawl-tables` between two of them (it bin-packs the four crawl
     tables and folds the cluster forwarding table), then a rebuilt
-    near-stage checkpoint: after EVERY tick the incremental labeling
+    checkpoint: after EVERY tick the incremental labeling
     equals connected_components(crawl_edges), which equals a
     from-scratch find_duplicates on the union of the batches."""
     import shutil
@@ -560,7 +577,7 @@ def test_crawl_edges_compaction_keeps_cluster_equality(
 
     versions = {
         n: SnapshotTable(spark, f"{root}/{n}").current_version()
-        for n in ("sig_table", "idx_table", "edges_table")
+        for n in ("sig_table", "idx_table", "edges_table", "lineage_table")
     }
     assert main(["compact", "--crawl-tables", root]) == 0
     for n, v in versions.items():
@@ -569,9 +586,9 @@ def test_crawl_edges_compaction_keeps_cluster_equality(
     tick([(4, near(3)), (11, near(1))])
     tick([(5, near(4))])
 
-    # a rebuilt near checkpoint restarts batch ids at 0: its batches must
-    # be folded into the labeling, not skipped as already seen
-    shutil.rmtree(f"{root}/ckpt_near")
+    # a rebuilt checkpoint restarts batch ids at 0: its batches must be
+    # folded into the labeling, not skipped as already seen
+    shutil.rmtree(f"{root}/ckpt")
     tick([(6, near(5))])
     assert (6, 1) in {
         (r["doc_id"], r["cluster_id"])

@@ -1,9 +1,10 @@
 """Randomized model test for the ACID snapshot table: a seeded sequence
 of mixed operations (append / upsert / copy-on-write and merge-on-read
-deletes / range DELETE WHERE on both the int key and the timestamp
-column / fold / compact / metadata-only rename / expire+vacuum) runs
-against BOTH the real table and a pure-Python row-multiset model, with
-read-equivalence asserted after EVERY op and time travel spot-checked
+deletes / stats-pruned range scans on both the int key and the
+timestamp column / fold / compact / metadata-only rename / expire+vacuum)
+runs against BOTH the real table and a pure-Python row-multiset model,
+with read-equivalence asserted after EVERY op, every scan checked
+against the model's rows in its range, and time travel spot-checked
 against remembered model snapshots.
 
 Why: round 5's review found that every pruning bug in this layer has the
@@ -18,8 +19,6 @@ from __future__ import annotations
 import datetime as dt
 import random
 
-from pyspark.sql import functions as F
-
 from simages_spark.table import SnapshotTable
 
 N_OPS = 60
@@ -28,7 +27,7 @@ KEYSPACE = 400  # small enough that ops collide constantly
 
 def _ts(doc_id: int) -> dt.datetime:
     # warc_ts is a deterministic function of doc_id so the model never
-    # tracks it separately — and deletes on it exercise temporal pruning
+    # tracks it separately — and scans on it exercise temporal pruning
     return dt.datetime(2020, 1, 1) + dt.timedelta(hours=doc_id)
 
 
@@ -65,7 +64,7 @@ def test_table_random_ops_match_model(spark, tmp_path):
             for _ in range(n)
         ]
 
-    # seed the table so early deletes have something to chew on
+    # seed the table so early deletes and scans have something to chew on
     model += new_rows(30)
     t.append(_mk_df(spark, model, text_col))
     history[t.current_version()] = _snapshot(model)
@@ -79,8 +78,8 @@ def test_table_random_ops_match_model(spark, tmp_path):
                 "upsert",
                 "delete_keys_cow",
                 "delete_keys_mor",
-                "delete_where_id",
-                "delete_where_ts",
+                "scan_id",
+                "scan_ts",
                 "apply_deletes",
                 "compact",
                 "rename",
@@ -107,33 +106,41 @@ def test_table_random_ops_match_model(spark, tmp_path):
                 merge_on_read=(op == "delete_keys_mor"),
             )
             model = [r for r in model if r[0] not in ks]
-        elif op == "delete_where_id":
-            # draw bounds from EXISTING ids half the time so the range
-            # edges land exactly on group stats boundaries — the place
-            # off-by-one prunes hide
-            pick = (
-                rng.choice(model)[0]
-                if model and rng.random() < 0.5
-                else rng.randrange(KEYSPACE)
+        elif op in ("scan_id", "scan_ts"):
+            # bounds drawn from the groups' doc_id [min,max] stats (±1)
+            # so the range edges land exactly on stats boundaries — the
+            # place off-by-one prunes hide; warc_ts is monotone in doc_id,
+            # so its stats boundaries are _ts of the same ids
+            stats = t.manifest(t.current_version()).get("group_stats") or {}
+            edges = [
+                e
+                for st in stats.values()
+                for e in ((st or {}).get("columns") or {}).get("doc_id", [])
+            ] or [rng.randrange(KEYSPACE)]
+            lo, hi = sorted(
+                rng.choice(edges) + rng.choice((-1, 0, 1)) for _ in range(2)
             )
-            a = pick
-            b = min(KEYSPACE, a + rng.randrange(1, KEYSPACE // 4))
-            t.delete_where(
-                (F.col("doc_id") >= a) & (F.col("doc_id") < b)
-            )
-            model = [r for r in model if not (a <= r[0] < b)]
-        elif op == "delete_where_ts":
-            cut = _ts(
-                rng.choice(model)[0]
-                if model and rng.random() < 0.5
-                else rng.randrange(KEYSPACE)
-            )
-            if rng.random() < 0.5:
-                t.delete_where(F.col("warc_ts") < cut)
-                model = [r for r in model if not (_ts(r[0]) < cut)]
+            side = rng.random()
+            lo = None if side < 0.2 else lo
+            hi = None if 0.2 <= side < 0.4 else hi
+            if op == "scan_id":
+                pred = ("doc_id", lo, hi)
             else:
-                t.delete_where(F.col("warc_ts") >= cut)
-                model = [r for r in model if not (_ts(r[0]) >= cut)]
+                pred = (
+                    "warc_ts",
+                    None if lo is None else _ts(lo),
+                    None if hi is None else _ts(hi),
+                )
+            got = sorted(
+                (r["doc_id"], r["warc_ts"], r[text_col])
+                for r in t.scan([pred]).collect()
+            )
+            want = sorted(
+                (d, _ts(d), s)
+                for d, s in model
+                if (lo is None or d >= lo) and (hi is None or d <= hi)
+            )
+            assert got == want, (step, pred, len(got), len(want))
         elif op == "apply_deletes":
             t.apply_deletes()  # visible rows must not change
         elif op == "compact":

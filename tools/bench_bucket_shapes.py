@@ -16,7 +16,6 @@ Usage: python tools/bench_bucket_shapes.py [sf_dir] [rounds]
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 
@@ -29,7 +28,7 @@ from simages_spark.functions.signatures import compute_signatures  # noqa: E402
 from simages_spark.operators.buckets import bucket_pairs  # noqa: E402
 from simages_spark.operators.lsh import band_keys  # noqa: E402
 from simages_spark.operators.simhash_join import simhash_keys  # noqa: E402
-from simages_spark.session import get_spark  # noqa: E402
+from simages_spark.session import default_cores, get_spark  # noqa: E402
 
 
 def noop(df) -> None:
@@ -44,7 +43,7 @@ def steal() -> int:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/bench_data/synth50k"
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     cfg = DedupConfig()
     spark = get_spark("bench_bucket_shapes", cores=cpus, shuffle_partitions=cpus)
     sc = spark.sparkContext

@@ -14,7 +14,7 @@ edges); the loop probes per batch. The edge SETS differ by construction
 contract, and min-label cluster ids make equality literal.
 
 Usage: python tools/soak_crawl_loop.py [total_docs] [n_batches]
-(cores: SPARK_GRAFT_CPUS, default 32)
+(cores: SPARK_GRAFT_CPUS, default the host's CPU count)
 """
 
 from __future__ import annotations

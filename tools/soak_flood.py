@@ -15,11 +15,12 @@ Usage: python tools/soak_flood.py [n_batches] [flood_per_batch] [fresh_per_batch
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -38,7 +39,7 @@ def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     flood_per = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000
     fresh_per = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000
-    spark = get_spark("soak_flood", cores=32)
+    spark = get_spark("soak_flood")
     cfg = DedupConfig()
     shutil.rmtree(ROOT, ignore_errors=True)
     inp = f"{ROOT}/incoming"
