@@ -130,23 +130,35 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != F.lit(""))
 
 
+# `tokens_col` as Spark SQL text over a `{text}` expression (the SQL
+# literal '\\s+' is the regex \s+)
+TOKENS_SQL = r"filter(split(lower({text}), '\\s+'), t -> t != '')"
+
+
 def shingles_col(text: Column, k: int = 5) -> Column:
     """JVM-side distinct shingle set as array<string> (whole-stage codegen).
 
     Matches `shingle_strings` exactly; used by the oracle-checkable
     exact-Jaccard queries so no Python runs in the comparison path.
+
+    The tokens are bound once as a lambda variable (the `buckets._bind`
+    idiom): a lambda that referenced `tokens_col(text)` itself would
+    re-split the whole page for every window, O(L²) per page.
     """
-    toks = tokens_col(text)
-    ngrams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )
-    whole = F.array(F.concat_ws(" ", toks))
-    return F.array_distinct(
-        F.when(F.size(toks) >= k, ngrams)
-        .when(F.size(toks) > 0, whole)
-        .otherwise(F.array().cast("array<string>"))
-    )
+
+    def from_tokens(toks: Column) -> Column:
+        ngrams = F.transform(
+            F.sequence(F.lit(0), F.size(toks) - k),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+        )
+        whole = F.array(F.concat_ws(" ", toks))
+        return F.array_distinct(
+            F.when(F.size(toks) >= k, ngrams)
+            .when(F.size(toks) > 0, whole)
+            .otherwise(F.array().cast("array<string>"))
+        )
+
+    return F.transform(F.array(tokens_col(text)), from_tokens)[0]
 
 
 def shingle_hash_col(text: Column, k: int = 5) -> Column:

@@ -103,29 +103,30 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     map-side partial combine — NOT an O(L²) per-row array lambda (Spark
     higher-order lambdas are interpreted per element; a 10⁴-token page
     would pay 10⁸ interpreted ops). The 2-gram ratio stays a per-row
-    array expression (O(L) windows). Empty/null text → all ratios 0.0.
+    array expression: the tokens are bound once as a lambda variable,
+    so its L-1 windows are O(L) work per page (a lambda referencing
+    `tokens_col(text)` itself re-splits the page per window, O(L²)).
+    Empty/null text → all ratios 0.0.
     """
     text = F.col(text_col)
     toks = tokens_col(text)
-    n = F.size(toks)  # NULL for null text (Spark 4 ANSI; legacy gave -1)
-    grams2 = F.when(
-        n >= 2,
-        F.transform(
+
+    def dup_2gram_ratio(t: Column) -> Column:
+        n = F.size(t)  # NULL for null text (Spark 4 ANSI; legacy gave -1)
+        grams2 = F.transform(
             F.sequence(F.lit(0), n - 2),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+            lambda i: F.concat_ws(" ", F.slice(t, i + 1, 2)),
+        )
+        # n - 1 windows when n ≥ 2
+        return F.when(
+            n >= 2, 1.0 - F.size(F.array_distinct(grams2)).cast("double") / (n - 1)
+        ).otherwise(F.lit(0.0))
+
     g2 = docs.select(
         "doc_id",
-        F.round(
-            F.when(
-                F.size(grams2) > 0,
-                1.0
-                - F.size(F.array_distinct(grams2)).cast("double")
-                / F.size(grams2),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("dup_2gram_ratio"),
+        F.round(F.transform(F.array(toks), dup_2gram_ratio)[0], 6).alias(
+            "dup_2gram_ratio"
+        ),
     )
     tok_counts = (
         docs.select("doc_id", F.explode(toks).alias("tok"))

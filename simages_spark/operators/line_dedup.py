@@ -21,14 +21,18 @@ below is granularity-agnostic.
 Scale posture (the part that matters at 100 TB):
 - segmentation is pure JVM column algebra (tokens → slice windows →
   posexplode) — whole-stage codegen, no Python;
-- keeper election is groupBy(segment_key).agg(min(struct(doc_id, pos)))
-  — map-side partial aggregation absorbs hot boilerplate keys (a
-  10^9-occurrence cookie banner contributes ONE row per map task to the
-  shuffle), which is exactly why this is NOT a
+- keeper election is groupBy(segment_key) + min of one decimal
+  (doc_id, pos) key — map-side partial aggregation absorbs hot
+  boilerplate keys (a 10^9-occurrence cookie banner contributes ONE row
+  per map task to the shuffle), which is exactly why this is NOT a
   Window.partitionBy(key).row_number() (one task would hold the whole
   hot key);
-- occurrence marking is an equi-join occurrences ⋈ winners on the
-  segment key — sort-merge, AQE-skew-splittable;
+- the deduped corpus needs no marking: each segment's election winner
+  IS its one kept occurrence, so the winners (carrying their segment
+  text) reassemble directly and the occurrences are segmented once;
+  only the per-doc stats mark every occurrence, through an equi-join
+  occurrences ⋈ winners on the segment key — sort-merge,
+  AQE-skew-splittable;
 - the segment key is the full 128-bit md5 hex of the segment text, not
   the 60-bit shingle hash: line removal is DESTRUCTIVE (a collision
   deletes an innocent line), and at ~10^12 segments a 60-bit space is
@@ -38,30 +42,41 @@ Scale posture (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType
 
-from simages_spark.functions.shingles import tokens_col
+from simages_spark.functions.shingles import TOKENS_SQL
+from simages_spark.operators.buckets import _bind
 
 DEFAULT_WORDS_PER_SEGMENT = 10
 
 
-def segments_col(text: Column, words_per_segment: int = DEFAULT_WORDS_PER_SEGMENT) -> Column:
-    """array<string> of consecutive `words_per_segment`-token windows.
+def segments_sql(text: str, words_per_segment: int = DEFAULT_WORDS_PER_SEGMENT) -> str:
+    """SQL: array<string> of consecutive `words_per_segment`-token
+    windows of the SQL expression `text`.
 
-    The last window may be shorter (slice clamps); zero-token texts map
-    to an EMPTY array — the sequence() guard matters because
-    sequence(0, -1) in Spark is [0, -1], not [].
+    The last window may be shorter (slice clamps); zero-token and NULL
+    texts map to an EMPTY array — the size guard matters because
+    sequence(0, -1) in Spark is [0, -1], not []. The tokens are split
+    ONCE and bound as the lambda variable `toks` (`buckets._bind`): a
+    window lambda that referenced the tokenizer itself re-split the
+    whole page per window.
     """
-    toks = tokens_col(text)
     w = words_per_segment
-    n_seg = F.ceil(F.size(toks) / F.lit(float(w))).cast("int")
-    windows = F.transform(
-        F.sequence(F.lit(0), n_seg - 1),
-        lambda i: F.concat_ws(" ", F.slice(toks, i * w + 1, w)),
+    windows = (
+        f"transform(sequence(0, CAST(ceil(size(toks) / {w}D) AS INT) - 1), "
+        f"i -> concat_ws(' ', slice(toks, i * {w} + 1, {w})))"
     )
-    return F.when(F.size(toks) > 0, windows).otherwise(
-        F.array().cast("array<string>")
+    return _bind(
+        TOKENS_SQL.format(text=text),
+        "toks",
+        f"CASE WHEN size(toks) > 0 THEN {windows} "
+        "ELSE CAST(array() AS array<string>) END",
     )
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def doc_segments(
@@ -75,17 +90,43 @@ def doc_segments(
     why 128 bits, not the 60-bit shingle hash). Null/empty texts emit no
     rows; doc-level consumers re-attach them via a left join.
     """
-    segs = docs.select(
-        "doc_id",
-        F.posexplode(
-            segments_col(F.col(text_col), words_per_segment)
-        ).alias("pos", "segment"),
-    )
-    return segs.withColumn("seg_key", F.md5(F.col("segment")))
+    segs = segments_sql(_quoted(text_col), words_per_segment)
+    return docs.selectExpr(
+        "doc_id", f"posexplode({segs}) AS (pos, segment)"
+    ).selectExpr("doc_id", "pos", "segment", "md5(segment) AS seg_key")
 
 
 _ENC_TWO63 = "CAST('9223372036854775808' AS DECIMAL(38,0))"  # 2^63
 _ENC_MUL = "CAST('2147483648' AS DECIMAL(38,0))"  # 2^31 > any pos (int32 ≥ 0)
+# the keep-first winner's (doc_id, pos), decoded from `_e` (see
+# `_first_occurrence`)
+_W_DOC_ID = f"CAST((_e - _e % {_ENC_MUL}) / {_ENC_MUL} - {_ENC_TWO63} AS BIGINT)"
+_W_POS = f"CAST(_e % {_ENC_MUL} AS INT)"
+
+
+def _first_occurrence(occurrences: DataFrame) -> str:
+    """SQL aggregate `_e`: the FIRST occurrence under (doc_id asc, pos
+    asc) of a group, as ONE decimal(38,0), (doc_id + 2^63)·2^31 + pos —
+    strictly monotone in (doc_id asc, pos asc), exact (≤ 29 digits), and
+    decoded losslessly by `_W_DOC_ID` / `_W_POS`.
+
+    The encoding is only order-preserving for 0 ≤ pos < 2^31: an int
+    `pos` column is required (a long one is refused here), and a
+    negative or NULL pos fails the query through raise_error instead of
+    electing a wrong keeper."""
+    fields = {f.name: f.dataType for f in occurrences.schema.fields}
+    if not isinstance(fields.get("pos"), IntegerType):
+        raise TypeError(
+            f"keep-first election needs an int `pos` column, got {fields.get('pos')}"
+        )
+    pos = (
+        "CASE WHEN pos >= 0 THEN pos ELSE raise_error("
+        "'keep-first election: pos must be a non-negative int') END"
+    )
+    return (
+        f"min((CAST(doc_id AS DECIMAL(38,0)) + {_ENC_TWO63}) * {_ENC_MUL}"
+        f" + CAST({pos} AS DECIMAL(38,0))) AS _e"
+    )
 
 
 def segment_keepers(occurrences: DataFrame) -> DataFrame:
@@ -97,10 +138,9 @@ def segment_keepers(occurrences: DataFrame) -> DataFrame:
     One shuffle with map-side partial agg; hot boilerplate keys reduce
     map-side instead of serializing through one window task.
 
-    The lexicographic (doc_id, pos) min is computed over ONE
-    decimal(38,0) encoding, (doc_id + 2^63)·2^31 + pos — strictly
-    monotone in (doc_id asc, pos asc), exact (≤ 29 digits), and decoded
-    losslessly below. Why not `min(struct(doc_id, pos))`: a struct
+    The lexicographic (doc_id, pos) min is computed over one decimal
+    encoding (`_first_occurrence`, which also enforces its pos
+    precondition). Why not `min(struct(doc_id, pos))`: a struct
     aggregation buffer is not a mutable UnsafeRow type, so the planner
     fell back to SortAggregate and SORTED every occurrence row on both
     sides of the exchange (observed in the plan; guide §7.2). The
@@ -109,15 +149,10 @@ def segment_keepers(occurrences: DataFrame) -> DataFrame:
     without the sorts. Equality with the struct-min form is pinned by
     tests/test_line_dedup.py over full-range doc_ids.
     """
-    two63, mul = F.expr(_ENC_TWO63), F.expr(_ENC_MUL)
-    enc = (
-        F.col("doc_id").cast("decimal(38,0)") + two63
-    ) * mul + F.col("pos").cast("decimal(38,0)")
-    w_pos = F.col("_e") % mul
-    return occurrences.groupBy("seg_key").agg(F.min(enc).alias("_e")).select(
-        "seg_key",
-        ((F.col("_e") - w_pos) / mul - two63).cast("long").alias("w_doc_id"),
-        w_pos.cast("int").alias("w_pos"),
+    return (
+        occurrences.groupBy("seg_key")
+        .agg(F.expr(_first_occurrence(occurrences)))
+        .selectExpr("seg_key", f"{_W_DOC_ID} AS w_doc_id", f"{_W_POS} AS w_pos")
     )
 
 
@@ -180,28 +215,38 @@ def line_deduped_corpus(
     survive with empty text (dropping them is a separate policy call —
     no silent row loss here).
 
+    Join-free: each segment keeps exactly one occurrence, its keep-first
+    winner, so the election's winners ARE the kept rows. The election
+    groups on (seg_key, segment) — `segment` determines `seg_key`, so
+    the groups are the seg_key groups, and carrying the segment through
+    the aggregate lets the winner rows reassemble directly. The
+    occurrences are therefore segmented once and read by one consumer;
+    marking every occurrence against the winners (`line_dup_stats`)
+    would need them twice plus a seg_key join.
+
     Reassembly is one doc-keyed shuffle: sort_array over collected
     (pos, segment) structs — per-doc bounded, no window.
     """
-    marked = _marked_occurrences(docs, words_per_segment, text_col)
-    kept = marked.where(~F.col("is_dup"))
+    occ = doc_segments(docs, words_per_segment, text_col)
+    kept = (
+        occ.groupBy("seg_key", "segment")
+        .agg(F.expr(_first_occurrence(occ)))
+        .selectExpr(f"{_W_DOC_ID} AS doc_id", f"{_W_POS} AS pos", "segment")
+    )
     rebuilt = kept.groupBy("doc_id").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "segment"))),
-                lambda s: s["segment"],
-            ),
-        ).alias("text_deduped"),
-        F.count("*").alias("n_segments_kept"),
+        F.expr(
+            "concat_ws(' ', transform(sort_array(collect_list(struct(pos, segment))),"
+            " s -> s.segment)) AS text_deduped"
+        ),
+        F.expr("count(*) AS n_segments_kept"),
     )
     return (
         docs.select("doc_id")
         .join(rebuilt, "doc_id", "left")
-        .select(
+        .selectExpr(
             "doc_id",
-            F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
-            F.coalesce("n_segments_kept", F.lit(0)).alias("n_segments_kept"),
+            "coalesce(text_deduped, '') AS text_deduped",
+            "coalesce(n_segments_kept, 0) AS n_segments_kept",
         )
     )
 

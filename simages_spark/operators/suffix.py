@@ -575,90 +575,51 @@ def strip_duplicate_spans(
     # ranks last (nn=1), then ts, then doc_id (total order — ties
     # impossible across distinct docs)
     if "warc_ts" in docs.columns:
-        prio = docs.select(
-            "doc_id",
-            F.struct(
-                F.col("warc_ts").isNull().cast("int").alias("nn"),
-                F.coalesce(F.col("warc_ts").cast("long"), F.lit(0)).alias("ts"),
-                F.col("doc_id").alias("id"),
-            ).alias("prio"),
-        )
+        nn, ts = "CAST(warc_ts IS NULL AS INT)", "coalesce(CAST(warc_ts AS BIGINT), 0)"
     else:
-        prio = docs.select(
-            "doc_id",
-            F.struct(
-                F.lit(0).alias("nn"),
-                F.lit(0).cast("long").alias("ts"),
-                F.col("doc_id").alias("id"),
-            ).alias("prio"),
-        )
+        nn, ts = "0", "CAST(0 AS BIGINT)"
+    prio = docs.selectExpr("doc_id", f"struct({nn} AS nn, {ts} AS ts, doc_id AS id) AS prio")
 
-    src_wins = F.col("p_src") < F.col("p_dst")
+    # the loser of each span's pair is cut over [s, e)
+    cut_pos = "CASE WHEN p_src < p_dst THEN pos_dst ELSE pos_src END"
     cuts = (
         spans.join(prio.selectExpr("doc_id AS src", "prio AS p_src"), "src")
         .join(prio.selectExpr("doc_id AS dst", "prio AS p_dst"), "dst")
-        .select(
-            F.when(src_wins, F.col("dst")).otherwise(F.col("src")).alias("doc_id"),
-            F.when(src_wins, F.col("pos_dst"))
-            .otherwise(F.col("pos_src"))
-            .alias("s"),
-            (
-                F.when(src_wins, F.col("pos_dst")).otherwise(F.col("pos_src"))
-                + F.col("run_len")
-            ).alias("e"),
+        .selectExpr(
+            "CASE WHEN p_src < p_dst THEN dst ELSE src END AS doc_id",
+            f"{cut_pos} AS s",
+            f"{cut_pos} + run_len AS e",
         )
     )
 
-    last = F.element_at  # noqa: E731 — readability below
-    merged_col = F.aggregate(
-        F.array_sort(F.collect_list(F.struct("s", "e"))),
-        F.lit(None).cast("array<struct<s:int,e:int>>"),
-        lambda acc, x: F.when(acc.isNull(), F.array(x)).otherwise(
-            F.when(
-                x["s"] <= last(acc, -1)["e"],  # overlap or touch → extend
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(
-                        F.struct(
-                            last(acc, -1)["s"].alias("s"),
-                            F.greatest(last(acc, -1)["e"], x["e"]).alias("e"),
-                        )
-                    ),
-                ),
-            ).otherwise(F.concat(acc, F.array(x)))
-        ),
-    )
-    per_doc = cuts.groupBy("doc_id").agg(merged_col.alias("merged"))
+    # sorted intervals folded left to right: one that overlaps or
+    # touches the last merged interval extends it, else it is appended
+    last = "element_at(acc, -1)"
+    merged = f"""aggregate(
+        array_sort(collect_list(struct(s, e))),
+        CAST(NULL AS array<struct<s:int,e:int>>),
+        (acc, x) -> CASE
+          WHEN acc IS NULL THEN array(x)
+          WHEN x.s <= {last}.e THEN concat(
+            slice(acc, 1, size(acc) - 1),
+            array(struct({last}.s AS s, greatest({last}.e, x.e) AS e)))
+          ELSE concat(acc, array(x))
+        END) AS merged"""
+    per_doc = cuts.groupBy("doc_id").agg(F.expr(merged))
 
-    text = F.col("text")
-    spliced = F.aggregate(
-        F.col("merged"),
-        F.struct(F.lit("").alias("out"), F.lit(0).alias("prev")),
-        lambda acc, x: F.struct(
-            F.concat(
-                acc["out"], text.substr(acc["prev"] + 1, x["s"] - acc["prev"])
-            ).alias("out"),
-            x["e"].alias("prev"),
-        ),
-        lambda acc: F.concat(
-            acc["out"], text.substr(acc["prev"] + 1, F.length(text) - acc["prev"])
-        ),
-    )
-    removed_chars = F.aggregate(
-        F.col("merged"), F.lit(0), lambda a, x: a + x["e"] - x["s"]
-    )
-
-    has_cuts = F.col("merged").isNotNull()
-    return (
-        docs.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(has_cuts, spliced).otherwise(text).alias("text"),
-            F.when(has_cuts, F.size("merged"))
-            .otherwise(F.lit(0))
-            .alias("n_spans_removed"),
-            F.when(has_cuts, removed_chars)
-            .otherwise(F.lit(0))
-            .alias("n_chars_removed"),
-        )
+    # the text between consecutive cuts, concatenated
+    spliced = """aggregate(
+        merged,
+        struct('' AS out, 0 AS prev),
+        (acc, x) -> struct(
+          concat(acc.out, substr(text, acc.prev + 1, x.s - acc.prev)) AS out,
+          x.e AS prev),
+        acc -> concat(acc.out, substr(text, acc.prev + 1, length(text) - acc.prev)))"""
+    removed_chars = "aggregate(merged, 0, (a, x) -> a + x.e - x.s)"
+    return docs.join(per_doc, "doc_id", "left").selectExpr(
+        "doc_id",
+        f"CASE WHEN merged IS NOT NULL THEN {spliced} ELSE text END AS text",
+        "CASE WHEN merged IS NOT NULL THEN size(merged) ELSE 0 END AS n_spans_removed",
+        f"CASE WHEN merged IS NOT NULL THEN {removed_chars} ELSE 0 END"
+        " AS n_chars_removed",
     )

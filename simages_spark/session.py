@@ -27,10 +27,11 @@ _HEAP_CAP_MB = 24 * 1024
 # Guava's 4 cache segments (~25 entries each, each evicting LRU on its
 # own), while one pass of find_duplicates on 4k pages compiles 111
 # distinct classes and strip_duplicate_spans + line_deduped_corpus on 2k
-# pages 96, so every warm pass recompiled 48-67 of them. One session
-# running both plus the table-backed crawl compiles 409 distinct classes
-# (291 with stage ids out of the class names, below); at 1000 each
-# segment holds 250, about twice its expected share of 409.
+# pages 74 (91 while its line tier segmented each page twice), so every
+# warm pass recompiled dozens of them. One session running both plus the
+# table-backed crawl compiled 409 distinct classes (291 with stage ids
+# out of the class names, below) at that time; at 1000 each segment holds
+# 250, about twice its expected share of 409.
 _CODEGEN_CACHE_ENTRIES = 1000
 
 

@@ -175,3 +175,116 @@ def test_segment_keepers_decimal_encoding_equals_struct_min(spark):
     assert sorted(map(tuple, ref.collect())) == sorted(
         map(tuple, got.collect())
     )
+
+
+def _marked_formulation(docs, w: int):
+    """line_deduped_corpus written as the occurrence-marking join: keep
+    the occurrences `_marked_occurrences` does not mark as duplicates."""
+    from pyspark.sql import functions as F
+
+    from simages_spark.operators.line_dedup import _marked_occurrences
+
+    kept = _marked_occurrences(docs, w, "text").where(~F.col("is_dup"))
+    rebuilt = kept.groupBy("doc_id").agg(
+        F.concat_ws(
+            " ",
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "segment"))),
+                lambda s: s["segment"],
+            ),
+        ).alias("text_deduped"),
+        F.count("*").alias("n_segments_kept"),
+    )
+    return docs.select("doc_id").join(rebuilt, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
+        F.coalesce("n_segments_kept", F.lit(0)).alias("n_segments_kept"),
+    )
+
+
+@pytest.mark.parametrize("nparts", [1, 3, 8])
+def test_join_free_corpus_equals_marking_join(spark, nparts):
+    """The join-free reassembly keeps exactly the occurrences the
+    marking join keeps: random full-range doc ids, segments repeated
+    inside one doc (only the first copy of the first holder survives),
+    null, empty and blank texts, on 1, 3 and 8 input partitions."""
+    rng = random.Random(100 + nparts)
+    vocab = [f"v{i}" for i in range(12)]
+    lines = [" ".join(rng.choices(vocab, k=W)) for _ in range(5)]
+    ids = rng.sample(range(-(2**40), 2**40), 60)
+    rows = []
+    for doc_id in ids:
+        roll = rng.random()
+        if roll < 0.05:
+            rows.append((doc_id, None))
+            continue
+        if roll < 0.1:
+            rows.append((doc_id, rng.choice(["", "   "])))
+            continue
+        parts = [rng.choice(lines) for _ in range(rng.randint(1, 5))]
+        if rng.random() < 0.5:  # the same line twice in one doc
+            parts.append(parts[0])
+        if rng.random() < 0.5:
+            parts.append(" ".join(rng.choices(vocab, k=rng.randint(1, W - 1))))
+        rows.append((doc_id, "  ".join(parts)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(nparts)
+    got = sorted(map(tuple, line_deduped_corpus(docs, words_per_segment=W).collect()))
+    want = sorted(map(tuple, _marked_formulation(docs, W).collect()))
+    assert got == want
+    assert len(got) == len(rows)
+    # segments were cut (the test has teeth)
+    assert sum(r[2] for r in got) < sum(len(_py_segments(t or "")) for _, t in rows)
+
+
+def test_span_and_line_pass_segments_each_page_once(spark):
+    """The executed plan of the span_dedup pass: the pages are segmented
+    by ONE posexplode, no join is keyed on seg_key (the winners are the
+    kept rows), and the span-extension Arrow UDF still runs."""
+    import re
+
+    from simages_spark.operators.suffix import strip_duplicate_spans
+
+    shared = "the quick brown fox jumps over the lazy dog while seven wizards hum"
+    footer = "cookie policy menu footer " * 4
+    docs = spark.createDataFrame(
+        [
+            (1, "aaaa " + shared + " zzzz " + footer),
+            (2, "bbbbbbbb " + shared + " yyyy " + footer),
+            (3, "entirely different words " + footer),
+            (4, None),
+        ],
+        "doc_id long, text string",
+    )
+    out = line_deduped_corpus(strip_duplicate_spans(docs), words_per_segment=W)
+    out.collect()
+    # the final plan; AQE prints the initial plan after it
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in plan, plan
+    assert len(re.findall(r"Generate posexplode", plan)) == 1, plan
+    assert not re.search(r"Join[^\n]*seg_key", plan), plan
+    assert "MapInPandas" in plan, plan
+
+
+def test_election_refuses_non_int_pos(spark):
+    """The decimal encoding orders (doc_id, pos) only for 0 ≤ pos < 2^31:
+    a long `pos` column is refused before any job runs."""
+    from simages_spark.operators.line_dedup import segment_keepers
+
+    occ = spark.createDataFrame([("k", 1, 0)], "seg_key string, doc_id long, pos long")
+    with pytest.raises(TypeError, match="int `pos`"):
+        segment_keepers(occ)
+
+
+def test_election_fails_on_negative_pos(spark):
+    """A negative pos would decode as another doc's position — (2, -1)
+    encodes exactly as (1, 2^31 - 1) — so the query fails instead."""
+    from simages_spark.operators.line_dedup import segment_keepers
+
+    occ = spark.createDataFrame(
+        [("k", 2, -1), ("j", 5, 3)], "seg_key string, doc_id long, pos int"
+    )
+    with pytest.raises(Exception, match="pos must be a non-negative int"):
+        segment_keepers(occ).collect()
+    fine = spark.createDataFrame([("j", 5, 3)], "seg_key string, doc_id long, pos int")
+    assert [tuple(r) for r in segment_keepers(fine).collect()] == [("j", 5, 3)]

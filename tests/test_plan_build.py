@@ -10,13 +10,15 @@ pipeline pass, before any job runs. The tests check:
     here in plain Python, and its plan keeps its exchange count;
   * a bucket above `cap` gives exactly the salt-split, truncated pair
     set, with the salt read from Spark's own `pmod(xxhash64(id), nsalt)`;
-  * building the candidate + edge plans, and the probe keys, stays
-    under a ceiling of py4j calls.
+  * building the candidate + edge plans, the probe keys, and the span
+    pass (`strip_duplicate_spans` + `line_deduped_corpus`) stays under a
+    ceiling of py4j calls.
 """
 
 from __future__ import annotations
 
 import re
+import threading
 from itertools import combinations
 
 import pytest
@@ -25,13 +27,14 @@ from py4j.clientserver import ClientServerConnection
 from simages_spark.config import DedupConfig
 from simages_spark.functions.signatures import SIGNATURE_SCHEMA, compute_signatures
 from simages_spark.operators.buckets import bucket_pairs, bucket_star_edges
+from simages_spark.operators.line_dedup import line_deduped_corpus
 from simages_spark.operators.lsh import candidate_pairs
 from simages_spark.operators.sig_index import probe_keys
 from simages_spark.operators.simhash_join import (
     _piece_widths,
     simhash_candidates,
 )
-from simages_spark.operators.suffix import substring_dup_spans
+from simages_spark.operators.suffix import strip_duplicate_spans, substring_dup_spans
 from simages_spark.operators.verify import verify_pairs
 from simages_spark.pipeline import build_candidates, build_edges
 
@@ -220,14 +223,19 @@ def test_hot_bucket_salt_split_and_truncated(spark, nsalt):
 
 
 class _CallCounter:
-    """Counts py4j commands sent to the JVM while active."""
+    """Counts the py4j commands this thread sends to the JVM while
+    active. py4j's finalizer thread, which releases JVM objects that
+    Python collected earlier, is not counted: when it runs is up to the
+    garbage collector, and it added up to ~1,200 calls to a build."""
 
     def __init__(self, monkeypatch):
         self.n = 0
         real = ClientServerConnection.send_command
+        me = threading.get_ident()
 
         def counting(conn, command):
-            self.n += 1
+            if threading.get_ident() == me:
+                self.n += 1
             return real(conn, command)
 
         monkeypatch.setattr(ClientServerConnection, "send_command", counting)
@@ -248,3 +256,15 @@ def test_plan_construction_py4j_budget(spark, monkeypatch):
     probe_keys(sig, CFG)
     # 2,500-3,600 with Column builders, ~90 as SQL text
     assert calls.n <= 400, calls.n
+
+
+def test_span_pass_py4j_budget(spark, monkeypatch):
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} " + "some shared words " * 8) for i in range(8)],
+        "doc_id long, text string",
+    )
+    calls = _CallCounter(monkeypatch)
+    line_deduped_corpus(strip_duplicate_spans(docs))
+    # ~3,300 with the span folds, priorities and segment reassembly as
+    # Column builders, ~550 as SQL text
+    assert calls.n <= 1500, calls.n

@@ -84,6 +84,25 @@ def test_jvm_matches_python(spark, docs_sf0001):
         assert sorted(r["sh"]) == sorted(shingle_strings(r["text"])), r["doc_id"]
 
 
+def test_jvm_long_pages_match_python(spark):
+    """Pages of thousands of tokens, with repeated windows: the window
+    lambda reads tokens bound once per page (a lambda that re-split the
+    page for every window made these O(L²))."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"t{i}" for i in range(40)]
+    texts = [" ".join(rng.choices(vocab, k=n)) for n in (4, 5, 3000, 12000)]
+    texts.append("\n".join(["boiler plate line of text"] * 2000))
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {
+        r["doc_id"]: sorted(r["sh"])
+        for r in df.select("doc_id", shingles_col(F.col("text")).alias("sh")).collect()
+    }
+    for i, t in enumerate(texts):
+        assert got[i] == sorted(shingle_strings(t)), i
+
+
 def test_jvm_edge_cases(spark):
     df = spark.createDataFrame(
         [(1, ""), (2, "   "), (3, "one two"), (4, "a b c d e f")], ["doc_id", "text"]

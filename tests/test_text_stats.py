@@ -93,6 +93,30 @@ def test_quality_filter_reasons(spark):
     assert got[3]["reason"] == "dominant_token"
 
 
+def test_repetition_stats_long_pages(spark):
+    """Pages of thousands of tokens: the 2-gram windows read tokens
+    bound once per page, O(L) (re-splitting the page per window was
+    O(L²)); values equal a plain-Python count."""
+    import random
+
+    from simages_spark.functions.shingles import tokenize
+
+    rng = random.Random(9)
+    texts = [
+        " ".join(rng.choices(["a", "b", "c", "dd", "e"], k=n)) for n in (2, 3000, 15000)
+    ]
+    texts.append(" ".join(["spam"] * 20000))
+    docs = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+    got = {r["doc_id"]: r for r in repetition_stats(docs).collect()}
+    for i, t in enumerate(texts):
+        toks = tokenize(t)
+        g2 = {(toks[j], toks[j + 1]) for j in range(len(toks) - 1)}
+        assert got[i]["n_tokens"] == len(toks)
+        assert got[i]["dup_2gram_ratio"] == pytest.approx(
+            1 - len(g2) / (len(toks) - 1), abs=1.1e-6
+        ), i
+
+
 def test_repetition_stats_matches_python_reference(spark):
     """200 seeded-random texts (skewed token distributions, whitespace
     runs, empties) through ONE Spark job vs a plain-Python reference
