@@ -556,7 +556,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # --- relational breadth over the star-schema tables (broadcast
         # fact⋈dimension joins, partial aggs, keyed windows — the plan
-        # shapes are asserted in tools/explain_audit.py) ---
+        # shapes are asserted in tests/test_relational.py) ---
         "tpch_pricing_summary": lambda spark, sf: pricing_summary(
             spark.read.parquet(f"{sf}/lineitem.parquet")
         ),

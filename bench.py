@@ -126,7 +126,8 @@ def main() -> None:
 
     # end-to-end (no reuse of the persisted intermediates), best-of-4:
     # the sandbox VM has multi-second CPU-steal bursts (measured: identical
-    # back-to-back e2e runs 9.5s vs 101.7s, tools/debug_e2e.py) — min over
+    # back-to-back e2e runs 9.5s vs 101.7s, with the retired
+    # tools/debug_e2e.py, last at 583afd2) — min over
     # reps estimates hardware capability, same methodology as
     # bench_scaling.py; all reps are reported, nothing hidden
     reps = []

@@ -12,8 +12,9 @@ Why Python and not the JVM expression (`shingle_hash_col`): Spark's
 higher-order array functions (transform/slice/concat_ws/conv) are
 *interpreted per element*, outside whole-stage codegen — measured 5×
 slower than this Arrow-batched path with C-speed hashlib md5
-(tools/bench_sig_paths.py: 13.6s vs 2.8s at 200k docs, identical
-outputs). The JVM expression is kept for the oracle-parity checks.
+(13.6s vs 2.8s at 200k docs, identical outputs; BENCH/BASELINE.md,
+from the retired tools/bench_sig_paths.py, last at 583afd2). The JVM
+expression is kept for the oracle-parity checks.
 
 Portability: shingle hashes are 60-bit md5 prefixes (functions/shingles.py),
 so MinHash (h_i(x) = (a_i*x + b_i) mod 2^64, a_i odd) and SimHash

@@ -24,10 +24,6 @@ LANG_ORDER = ["en", "de", "fr", "es"]  # deterministic tie-break order
 BPE_TOKEN_REGEX = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens_col(text))
-
-
 def bpe_token_count(text: Column) -> Column:
     """BPE-ish subword count: alpha runs + digit runs + lone symbols."""
     return F.regexp_count(F.lower(text), F.lit(BPE_TOKEN_REGEX))

@@ -36,8 +36,9 @@ edges ever consumed: cluster merging is CONFLUENT (component minima are
 order-invariant under edge arrival order), each existing label is by
 induction the min doc_id of its component, and the contracted CC's root
 is the min over merged labels and new doc ids — i.e. the global
-component min. Asserted literally in tests/test_cluster_state.py and
-tools/soak_crawl_loop.py.
+component min. Asserted literally in tests/test_cluster_state.py; the
+1M- and 10M-doc crawl-loop runs in BENCH/crawl_loop_*_r05.json (the
+retired tools/soak_crawl_loop.py, last at 583afd2) checked it at scale.
 
 Retry safety (foreachBatch replays): endpoint resolution reads members
 FILTERED to rows from earlier (source_id, batch_id) — the same

@@ -107,13 +107,6 @@ def pairwise_groups(edges: DataFrame) -> DataFrame:
     )
 
 
-def fetch_docs(clusters_or_ids: DataFrame, docs: DataFrame) -> DataFrame:
-    """M6 analog: map ids back to content (the reference decodes embeddings
-    back to images, reference: src/simages/extractor.py:546-587; for hash
-    signatures the inverse is a join back to the corpus)."""
-    return clusters_or_ids.join(docs, "doc_id")
-
-
 def paginate_groups(
     groups: DataFrame, page_size: int = 25, order_col: str = "total"
 ) -> DataFrame:

@@ -13,8 +13,8 @@ The probe is ONE equi-join against the slim probe index
 16 bytes/row):
 
     new docs → signatures (Arrow UDF over the batch only)
-    → probe keys ⋈ index(pkey, doc_id)    (AQE broadcasts the batch
-      side when it is small — the usual case)
+    → probe keys ⋈ index(pkey, doc_id)    (the batch side is broadcast;
+      the store side is never shuffled)
     → shingle payload fetched for MATCHED store docs only (left-semi)
     → exact-Jaccard verify
 
@@ -39,6 +39,7 @@ from simages_spark.config import DedupConfig
 from simages_spark.functions.signatures import compute_signatures
 from simages_spark.operators.sig_index import probe_keys
 from simages_spark.operators.verify import verify_pairs
+from simages_spark.pipeline import near_dup_pairs
 
 
 def _probe_join(nk: DataFrame, idx: DataFrame, cfg: DedupConfig):
@@ -48,8 +49,8 @@ def _probe_join(nk: DataFrame, idx: DataFrame, cfg: DedupConfig):
     would make the metrics report a different candidate set than the
     probe actually uses). Returns (joined, ok):
 
-      joined — (kind, pkey) equi-join of batch probe keys against the
-               store index, src != dst
+      joined — (kind, pkey) equi-join of the broadcast batch probe keys
+               against the store index, src != dst
       ok     — kind-1 (SimHash combination-key) matches get the SAME
                exact bit_count(xor) <= d cut the batch pipeline applies,
                so detection is arrival-order-invariant: a pair is a
@@ -57,8 +58,13 @@ def _probe_join(nk: DataFrame, idx: DataFrame, cfg: DedupConfig):
                agree, OR keys agree AND Hamming <= d); kind-0 band
                matches are always ok
     """
+    # the whole point of the index: the STORE side must never be shuffled
+    # or sorted. The batch's ~36 keys/doc are ~0.6 KB/doc — broadcastable
+    # far beyond the 10 MB AQE default (measured: a 100k-doc batch is
+    # ~58 MB broadcast vs sort-merge-shuffling 360M index rows at a
+    # 10M-doc store).
     joined = (
-        nk.select(
+        F.broadcast(nk).select(
             "kind", "pkey",
             F.col("doc_id").alias("src"), F.col("simhash").alias("sim_src"),
         )
@@ -85,8 +91,6 @@ def incremental_dedup_edges(
     new_signatures: DataFrame | None = None,
     existing_index: DataFrame | None = None,
     include_within_batch: bool = False,
-    use_simhash: bool = True,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """edges(src=new doc_id, dst=existing doc_id, jaccard ≥ τ), plus
     batch-internal pairs when `include_within_batch`.
@@ -113,19 +117,9 @@ def incremental_dedup_edges(
     idx = (
         existing_index
         if existing_index is not None
-        else probe_keys(existing_signatures, cfg, use_simhash)
+        else probe_keys(existing_signatures, cfg)
     )
-    nk = probe_keys(new_sig, cfg, use_simhash)
-    if broadcast_batch:
-        # the whole point of the index: the STORE side must never be
-        # shuffled or sorted. The batch's ~36 keys/doc are ~0.6 KB/doc —
-        # broadcastable far beyond the 10 MB AQE default (measured: a
-        # 100k-doc batch is ~58 MB broadcast vs sort-merge-shuffling 360M
-        # index rows at a 10M-doc store). For batches too big to
-        # broadcast, pass broadcast_batch=False and probe the
-        # bucketed-index layout instead (sig_index.py).
-        nk = F.broadcast(nk)
-    joined, ham_ok = _probe_join(nk, idx, cfg)
+    joined, ham_ok = _probe_join(probe_keys(new_sig, cfg), idx, cfg)
     candidates = (
         joined.where(ham_ok)
         .select("src", "dst")
@@ -186,7 +180,7 @@ def incremental_dedup_edges(
     )
     edges = verify_pairs(candidates, sets, cfg)
     if include_within_batch:
-        edges = edges.unionByName(within_batch_edges(new_sig, cfg, use_simhash))
+        edges = edges.unionByName(within_batch_edges(new_sig, cfg))
     return edges
 
 
@@ -194,7 +188,6 @@ def probe_metrics(
     new_signatures: DataFrame,
     existing_index: DataFrame,
     cfg: DedupConfig | None = None,
-    use_simhash: bool = True,
 ) -> DataFrame:
     """Probe-health counters (north-rule never-silent metrics): per key
     family, how many candidate pairs the index join surfaced, how many
@@ -202,8 +195,9 @@ def probe_metrics(
     docs must ship shingle payload to verify — the numbers that say what
     a batch actually costs against a given store."""
     cfg = cfg or DedupConfig()
-    nk = probe_keys(new_signatures, cfg, use_simhash)
-    joined, ham_ok = _probe_join(F.broadcast(nk), existing_index, cfg)
+    joined, ham_ok = _probe_join(
+        probe_keys(new_signatures, cfg), existing_index, cfg
+    )
     per_pair = (
         joined.withColumn("ok", ham_ok)
         .groupBy("src", "dst")
@@ -239,27 +233,11 @@ def probe_metrics(
 
 
 def within_batch_edges(
-    new_signatures: DataFrame,
-    cfg: DedupConfig | None = None,
-    use_simhash: bool = True,
+    new_signatures: DataFrame, cfg: DedupConfig | None = None
 ) -> DataFrame:
     """Near-dup edges (src < dst, jaccard ≥ τ) INSIDE one batch — the
     batch pipeline's candidate stage applied to the batch's signatures
     alone (LSH ∪ SimHash, bounded bucket expansion, exact verify)."""
-    from simages_spark.operators.lsh import candidate_pairs
-    from simages_spark.operators.simhash_join import simhash_candidates
-
     cfg = cfg or DedupConfig()
-    # dedup=False on both branches: the union's dropDuplicates below is
-    # the single pair-dedup exchange (same reasoning as the pipeline's
-    # build_candidates, guide §2.4)
-    cand = candidate_pairs(new_signatures, cfg, dedup=False)
-    if use_simhash:
-        cand = cand.unionByName(
-            simhash_candidates(new_signatures, cfg, dedup=False).select(
-                "src", "dst"
-            )
-        )
-    return verify_pairs(
-        cand.dropDuplicates(["src", "dst"]), new_signatures, cfg
-    )
+    cand = near_dup_pairs(new_signatures, cfg).dropDuplicates(["src", "dst"])
+    return verify_pairs(cand, new_signatures, cfg)

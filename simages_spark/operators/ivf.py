@@ -64,8 +64,10 @@ def ivf_centroids_trained(
     (round-3 verdict "missing" item 1: the reference's analog is the
     LEARNED autoencoder embedding space, src/simages/extractor.py:232-275;
     the lowest-id codebook of `ivf_centroids` stays the oracle-replayable
-    default, and recall at fixed nprobe between the two is measured in
-    tools/bench_ivf_recall.py → BENCH/BASELINE.md).
+    default; recall at fixed nprobe between the two is recorded in
+    BENCH/ivf_recall.json and BENCH/ivf_recall_1m.json, written by the
+    retired tools/bench_ivf_recall.py and tools/soak_ivf_recall_1m.py,
+    last at 583afd2).
 
     Deterministic BY CONSTRUCTION, not by luck:
     * init = the lowest-id vectors (`ivf_centroids`) — no RNG;

@@ -10,23 +10,18 @@ signature UDF and ride along as `shingle_hashes`.
 Scale notes: the two joins shuffle candidates on src then dst against the
 signatures table; AQE skew-split covers hot docs that appear in many
 candidate pairs. Writing the signatures checkpoint bucketBy(doc_id)
-provably removes both corpus-sized exchanges from this join's plan —
-measured in tools/bench_bucketed_verify.py (8 → 6 exchanges, identical
-edges); it only pays off where shuffle is cross-executor network, so
-plain parquet stays the local default (numbers in BENCH/BASELINE.md). When the shingle-array payload
-dominates (hot docs replicated per candidate pair, or a checkpointed
-signatures table that must stay slim), `verify_pairs_recompute` trades a
-second text scan over *candidate docs only* for not carrying
-`shingle_hashes` through the shuffle at all — measured side by side in
-tools/bench_verify_payload.py; BENCH/BASELINE.md records the numbers.
+provably removes both corpus-sized exchanges from this join's plan
+(8 → 6 exchanges, identical edges); it only pays off where shuffle is
+cross-executor network, so plain parquet stays the local default.
+BENCH/BASELINE.md records that experiment and one that re-derived the
+shingle sets at verify time instead of carrying `shingle_hashes`
+(indistinguishable at ~1 KB/doc of payload); both scripts, the retired
+tools/bench_bucketed_verify.py and tools/bench_verify_payload.py, last
+lived at 583afd2.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from simages_spark.config import DedupConfig
@@ -97,62 +92,6 @@ def verify_pairs(
     )
 
 
-def verify_pairs_recompute(
-    candidates: DataFrame,
-    docs: DataFrame,
-    cfg: DedupConfig | None = None,
-    keep_below_threshold: bool = False,
-) -> DataFrame:
-    """Verify WITHOUT the signatures table: re-derive shingle sets from
-    `text`, for candidate docs only (semi-join first).
-
-    The documented alternative when the shingle-array payload is the
-    bottleneck: the signatures checkpoint shrinks to minhash+simhash
-    (~1 KB/doc instead of up to 64 KB/doc), at the price of re-reading
-    `text` for the (typically small) fraction of docs that appear in a
-    candidate pair. Output is identical to `verify_pairs` by construction
-    — both hash through functions/shingles.py.
-    """
-    cfg = cfg or DedupConfig()
-    cap, k = cfg.max_shingles_per_doc, cfg.shingle_size
-    ids = (
-        candidates.select(F.col("src").alias("doc_id"))
-        .unionByName(candidates.select(F.col("dst").alias("doc_id")))
-        .distinct()
-    )
-    cand_docs = docs.join(ids, "doc_id", "left_semi").select("doc_id", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from simages_spark.functions.shingles import (
-            hash_shingles,
-            shingle_strings,
-        )
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "shingle_hashes": [
-                        hash_shingles(shingle_strings(t, k))[:cap].astype(np.int64)
-                        for t in pdf["text"].fillna("")
-                    ],
-                }
-            )
-
-    # persist: the recomputed sets feed both the src- and dst-side joins;
-    # without it the hashing UDF runs twice (the round-1 suffix lesson)
-    sets = cand_docs.mapInPandas(
-        run, schema="doc_id long, shingle_hashes array<long>"
-    ).persist()
-    return _jaccard_edges(
-        candidates,
-        sets,
-        None if keep_below_threshold else cfg.jaccard_threshold,
-    )
-
-
 def top_k_pairs(edges: DataFrame, k: int) -> DataFrame:
     """Global top-k most-similar pairs, the reference's result contract
     (closest first, reference: README.md:9-10; n clamp src/simages/extractor.py:330-333).
@@ -171,8 +110,7 @@ def quantile_pairs(edges: DataFrame, q: float) -> DataFrame:
     Cache lifetime is owned by the CALLER: the cached edges block stays
     until `edges.unpersist()` or session end — a long-lived session
     issuing many quantile_pairs calls over different edge sets should
-    unpersist each input once the filtered result is materialized
-    (same contract for the recomputed `sets` in verify_pairs_recompute).
+    unpersist each input once the filtered result is materialized.
     """
     edges = edges.persist()
     thresh = edges.agg(

@@ -47,10 +47,6 @@ class DedupResult:
     clusters: DataFrame  # (doc_id, cluster_id), only docs in some edge
 
 
-def build_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    return compute_signatures(docs, cfg)
-
-
 def representative_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """One representative (min doc_id) per distinct non-empty text.
 
@@ -79,8 +75,23 @@ def representative_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def near_dup_pairs(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """LSH ∪ SimHash candidate pairs (src, dst) over `signatures`, NOT yet
+    deduplicated — the one candidate union of the batch pipeline
+    (`build_candidates`) and of the crawl's within-batch pass.
+
+    The caller's dropDuplicates is the ONLY pair-dedup exchange: both
+    branches run with dedup=False (guide §2.4 — their internal dedups
+    produced the same distinct set the union dedup recomputes; per-branch
+    duplicate rows are full-row identical, so the merged distinct set is
+    unchanged)."""
+    return candidate_pairs(signatures, cfg, dedup=False).unionByName(
+        simhash_candidates(signatures, cfg, dedup=False).select("src", "dst")
+    )
+
+
 def build_candidates(
-    docs: DataFrame, signatures: DataFrame, cfg: DedupConfig, use_simhash: bool = True
+    docs: DataFrame, signatures: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """Near-dup candidate pairs over whatever `signatures` covers.
 
@@ -88,18 +99,8 @@ def build_candidates(
     star EDGES in `build_edges`, not candidates — representatives have
     pairwise-distinct texts and identical docs never need verification.
     Legacy path: exact pairs union in here (cheap, guarantees identical
-    docs pair up even if both LSH and SimHash somehow missed).
-
-    The union's final dropDuplicates is the ONLY pair-dedup exchange:
-    both branches run with dedup=False (guide §2.4 — their internal
-    dedups produced the same distinct set the union dedup recomputes;
-    per-branch duplicate rows are full-row identical, so the merged
-    distinct set is unchanged)."""
-    cand = candidate_pairs(signatures, cfg, dedup=False)
-    if use_simhash:
-        cand = cand.unionByName(
-            simhash_candidates(signatures, cfg, dedup=False).select("src", "dst")
-        )
+    docs pair up even if both LSH and SimHash somehow missed)."""
+    cand = near_dup_pairs(signatures, cfg)
     if not cfg.exact_first:
         cand = cand.unionByName(exact_dup_edges(docs).select("src", "dst"))
     return cand.dropDuplicates(["src", "dst"])
@@ -122,11 +123,7 @@ def build_edges(
     return edges
 
 
-def find_duplicates(
-    docs: DataFrame,
-    cfg: DedupConfig | None = None,
-    use_simhash: bool = True,
-) -> DedupResult:
+def find_duplicates(docs: DataFrame, cfg: DedupConfig | None = None) -> DedupResult:
     """The flagship path (reference: src/simages/main.py:136-205).
 
     `docs` needs (doc_id long, text string). Returns lazy DataFrames; with
@@ -147,7 +144,7 @@ def find_duplicates(
         # each stage hashes only the knobs that can change ITS output
         signatures = store.get_or_compute(
             "signatures",
-            lambda: build_signatures(sig_docs, cfg),
+            lambda: compute_signatures(sig_docs, cfg),
             fingerprint=config_fingerprint(cfg, stage="signatures"),
         )
     else:
@@ -155,9 +152,9 @@ def find_duplicates(
         # checkpoint the Arrow UDF would re-run per consumer — persist once
         # (disk-spillable; the parquet checkpoint is the cluster-
         # scale equivalent, reference analog: extractor.py:179-189 cache)
-        signatures = build_signatures(sig_docs, cfg).persist()
+        signatures = compute_signatures(sig_docs, cfg).persist()
 
-    candidates = build_candidates(docs, signatures, cfg, use_simhash)
+    candidates = build_candidates(docs, signatures, cfg)
 
     def _edges() -> DataFrame:
         return build_edges(candidates, signatures, docs, cfg)

@@ -14,7 +14,7 @@ Money aggregates sum EXACT decimals (the columns are 2-decimal money;
 double summation order differs between engines/partitionings and flips
 low bits at 10^8 magnitudes) and convert to double only at the end —
 bit-identical results at any parallelism, which is also what makes them
-driver-oracle value-checkable. `tools/explain_audit.py` asserts the
+driver-oracle value-checkable. tests/test_relational.py asserts the
 BroadcastHashJoin choices on the dimension side.
 """
 

@@ -178,7 +178,10 @@ def process_near_dedup_batch_tables(
     per-batch groups (`compact --crawl-tables`),
     `expire_snapshots` + `vacuum` reclaim, history is the crawl's audit
     log, and any past batch boundary is time-travelable."""
-    from simages_spark.operators.incremental import incremental_dedup_edges
+    from simages_spark.operators.incremental import (
+        incremental_dedup_edges,
+        within_batch_edges,
+    )
     from simages_spark.operators.sig_index import probe_keys
     from simages_spark.table import SnapshotTable
 
@@ -222,7 +225,7 @@ def process_near_dedup_batch_tables(
                 include_within_batch=include_within_batch,
             )
         elif include_within_batch:
-            edges = _within_first_batch_edges(new_sig, cfg)
+            edges = within_batch_edges(new_sig, cfg)
         else:
             edges = None
         if edges is not None:
@@ -287,12 +290,6 @@ def stream_near_dedup_to_tables(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def _within_first_batch_edges(new_sig, cfg: DedupConfig):
-    from simages_spark.operators.incremental import within_batch_edges
-
-    return within_batch_edges(new_sig, cfg)
 
 
 EVENTS_SCHEMA = (
@@ -517,8 +514,9 @@ def stream_crawl_dedup(
     sees two rows of the same text, so the quadratic copy-vs-copy
     candidate explosion is structurally impossible
     (tests/test_streaming.py asserts the probe-side signature store holds
-    one row per distinct text; tools/soak_flood.py measures linearity at
-    scale).
+    one row per distinct text; BENCH/flood_r05_final.json is the
+    at-scale linearity run of the retired tools/soak_flood.py, last at
+    583afd2).
 
     Full duplicate clusters: after the query, every micro-batch of this
     checkpoint incarnation that the labeling under `root/clusters` has

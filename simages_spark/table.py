@@ -1020,8 +1020,9 @@ class SnapshotTable:
         `apply-policy --table-root` path: the reference's move-to-Trash
         (src/simages/duplicate_finder.py:286-301) as an atomic snapshot.
         Wall time scales with AFFECTED data, not table group count
-        (tools/soak_table_scaling.py; job count asserted in
-        tests/test_table.py).
+        (BENCH/table_scaling_r05_final.json, from the retired
+        tools/soak_table_scaling.py, last at 583afd2; job count asserted
+        in tests/test_table.py).
 
         With `merge_on_read=True` (round-4 verdict item 5) nothing is
         rewritten at all: the key set lands as a tiny equality-delete

@@ -32,12 +32,11 @@ def _edges(df):
 
 
 def test_probe_index_equivalence(spark, tmp_path):
-    """Probing a written probe-index table yields exactly the edges of the
-    recompute-from-signatures path."""
-    from simages_spark.operators.sig_index import (
-        read_probe_index,
-        write_probe_index,
-    )
+    """Probing the index as the crawl stores it (a SnapshotTable of
+    `probe_keys`) yields exactly the edges of the recompute-from-signatures
+    path."""
+    from simages_spark.operators.sig_index import probe_keys
+    from simages_spark.table import SnapshotTable
 
     corpus = _df(spark, [(1, BASE_A), (2, BASE_B), (3, BASE_C)])
     batch = _df(spark, [(10, NEAR_A), (11, BASE_C), (12, "fresh unrelated")])
@@ -45,10 +44,10 @@ def test_probe_index_equivalence(spark, tmp_path):
 
     direct = _edges(incremental_dedup_edges(batch, sig, CFG))
 
-    idx_path = str(tmp_path / "probe_index")
-    write_probe_index(sig, idx_path, CFG)
+    table = SnapshotTable(spark, str(tmp_path / "idx_table"))
+    table.append(probe_keys(sig, CFG))
     via_index = _edges(
-        incremental_dedup_edges(batch, sig, CFG, existing_index=read_probe_index(spark, idx_path))
+        incremental_dedup_edges(batch, sig, CFG, existing_index=table.read())
     )
     assert direct == via_index
     assert (10, 1) in direct and direct[(11, 3)] == 1.0
@@ -70,9 +69,7 @@ def test_simhash_parity_in_probe(spark):
     batch = _df(spark, [(10, long_near)])
     sig = compute_signatures(corpus, CFG)
     # simhash-only index: drop the band-key family (kind 0)
-    sim_only = probe_keys(sig, CFG).join(
-        probe_keys(sig, CFG, use_simhash=False), ["pkey", "doc_id"], "left_anti"
-    )
+    sim_only = probe_keys(sig, CFG).where("kind = 1")
     got = _edges(
         incremental_dedup_edges(batch, sig, CFG, existing_index=sim_only)
     )
@@ -195,6 +192,45 @@ def test_probe_metrics_counts(spark):
     assert m["n_via_simhash"] >= 1
     assert m["n_matched_store_docs"] == 2
     assert m["n_hamming_cut_pairs"] >= 0
+
+
+def test_probe_broadcasts_batch_and_never_shuffles_index(spark, tmp_path):
+    """The probe's (kind, pkey) join broadcasts the batch's keys and
+    reads the stored index straight into the join: a BroadcastHashJoin
+    building the left (batch) side, with no Exchange between the index's
+    parquet scan and the join. Checked on `probe_metrics`' executed plan,
+    which shares `_probe_join` with `incremental_dedup_edges` (whose own
+    plan starts at its eager localCheckpoint)."""
+    from simages_spark.operators.incremental import probe_metrics
+    from simages_spark.operators.sig_index import probe_keys
+    from simages_spark.table import SnapshotTable
+
+    corpus_sig = compute_signatures(_df(spark, [(1, BASE_A), (2, BASE_B)]), CFG)
+    batch_sig = compute_signatures(_df(spark, [(10, NEAR_A), (11, BASE_B)]), CFG)
+    table = SnapshotTable(spark, str(tmp_path / "idx_table"))
+    table.append(probe_keys(corpus_sig, CFG))
+    m = probe_metrics(batch_sig, table.read(), CFG)
+    assert m.collect()[0]["n_candidate_pairs"] == 2
+    # AQE's final plan: the part before "== Initial Plan =="
+    plan = m._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+
+    (at,) = [i for i, line in enumerate(lines) if "BroadcastHashJoin [kind" in line]
+    assert "BuildLeft" in lines[at], lines[at]
+    # children of the join hang at its own column: ":- " the build (batch)
+    # side, then "+- " the index side, whose subtree is indented past it
+    col = len(lines[at]) - len(lines[at].lstrip(" :+-"))
+    rails = [line[col:col + 3] for line in lines]
+    second = next(i for i in range(at + 1, len(lines)) if rails[i] == "+- ")
+    index_side = [lines[second]]
+    for line, rail in zip(lines[second + 1:], rails[second + 1:]):
+        if rail != "   ":
+            break
+        index_side.append(line)
+    build_side = lines[at + 1:second]
+    assert any("BroadcastExchange" in line for line in build_side), build_side
+    assert "FileScan parquet" in index_side[-1], index_side
+    assert not any("Exchange" in line for line in index_side), index_side
 
 
 def test_first_batch_within_edges(spark, tmp_path):

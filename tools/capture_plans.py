@@ -20,7 +20,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from simages_spark.config import DedupConfig  # noqa: E402
 from simages_spark.functions.signatures import compute_signatures  # noqa: E402
 from simages_spark.functions.text_stats import quality_columns  # noqa: E402
-from simages_spark.operators.connected_components import _large_star, _small_star  # noqa: E402
 from simages_spark.operators.exact import exact_dup_groups  # noqa: E402
 from simages_spark.operators.lsh import candidate_pairs  # noqa: E402
 from simages_spark.operators.simhash_join import simhash_candidates  # noqa: E402
@@ -41,9 +40,6 @@ def main() -> None:
     docs.count()
     sig = compute_signatures(docs, cfg).persist()
     sig.count()
-    cand = candidate_pairs(sig, cfg)
-    edges = verify_pairs(cand, sig, cfg).persist()
-    edges.count()
 
     plans = {
         "signatures": compute_signatures(
@@ -57,7 +53,6 @@ def main() -> None:
         "exact_dups": exact_dup_groups(docs),
         "doc_quality": quality_columns(docs),
         "substring_pairs": substring_dup_pairs(docs, 64),
-        "cc_one_round": _small_star(_large_star(edges.select("src", "dst"))),
     }
     for name, df in plans.items():
         text = df._sc._jvm.PythonSQLUtils.explainString(
